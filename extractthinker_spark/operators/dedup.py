@@ -22,6 +22,7 @@ pair generation is within-bucket.
 
 from __future__ import annotations
 
+import functools
 import warnings
 
 import pyspark.sql.functions as F
@@ -58,6 +59,7 @@ def duplicate_groups_exact(df: DataFrame, key: str, text_col: str) -> DataFrame:
 # Shingles + MinHash + LSH
 # --------------------------------------------------------------------------
 
+@functools.cache
 def _shingles_of_fn(k: int):
     """Per-string distinct k-gram builder (python side), byte-exact
     with the original Catalyst per-char split + slice + array_join +
@@ -97,11 +99,8 @@ def _shingles_of_fn(k: int):
     return shingles_of
 
 
-_SHINGLE_UDFS: dict[int, object] = {}
-
-
 def _shingle_udf(k: int):
-    """Arrow-batch shingle builder for a fixed ``k`` (cached per k).
+    """Arrow-batch shingle builder for a fixed ``k``.
 
     Replaces the previous pure-Catalyst per-char split + slice +
     array_join chain: those are higher-order functions Catalyst
@@ -110,12 +109,16 @@ def _shingle_udf(k: int):
     windows of the UTF-32 view at once and a fixed-width string view
     over them (guide §4.2: batch native compute), ~10x cheaper.
 
+    Only the python closure is cached (``_shingles_of_fn``); the
+    pandas_udf wrapper is built per call, because a UDF object binds
+    its JVM function (and the accumulator of the SparkContext it first
+    ran under) on first use — a cached wrapper outlives a stopped
+    session.
+
     Marked nondeterministic — the repo's established plan barrier so
     InferFiltersFromGenerate cannot duplicate the UDF below a
     downstream explode (guide §4.4); subtree reuse across join sides
     is provided by the callers' lazy localCheckpoints instead."""
-    if k in _SHINGLE_UDFS:
-        return _SHINGLE_UDFS[k]
     import pandas as pd
 
     shingles_of = _shingles_of_fn(k)
@@ -124,9 +127,7 @@ def _shingle_udf(k: int):
     def sh_udf(texts: pd.Series) -> pd.Series:
         return texts.map(shingles_of)
 
-    udf = sh_udf.asNondeterministic()
-    _SHINGLE_UDFS[k] = udf
-    return udf
+    return sh_udf.asNondeterministic()
 
 
 def char_shingles(text: Column, k: int = 5) -> Column:
@@ -155,7 +156,13 @@ _M64 = (1 << 64) - 1
 def _xxh64_fixed_np(mat, seed: int = 42):
     """Vectorized XXH64 over n same-length rows (mat: (n, L) uint8,
     L < 32 — the small-input path; every lane op is a numpy uint64
-    wraparound op, exactly the C semantics)."""
+    wraparound op, exactly the C semantics).
+
+    Lanes are read little-endian (``<u8``/``<u4``) on every host.
+    Spark's XXH64 reads them in the JVM's native byte order, so parity
+    with ``xxhash64(seed=42)`` assumes a little-endian JVM host
+    (x86-64, aarch64); on a big-endian one (s390x) the two would
+    differ silently."""
     import numpy as np
 
     n, L = mat.shape
@@ -196,7 +203,11 @@ def _xxh64_fixed_np(mat, seed: int = 42):
 def _xxh64_any(b: bytes, seed: int = 42) -> int:
     """Pure-python XXH64 for arbitrary input length (the >= 32-byte
     accumulator path included) — the fallback for oversized shingles
-    (k large enough that a shingle's UTF-8 exceeds 31 bytes)."""
+    (k large enough that a shingle's UTF-8 exceeds 31 bytes).
+
+    Lanes are read little-endian, so, as for ``_xxh64_fixed_np``,
+    parity with Spark's native-order reads assumes a little-endian JVM
+    host."""
     def rotl(x, r):
         return ((x << r) | (x >> (64 - r))) & _M64
 
@@ -248,9 +259,6 @@ def _perm_constants(i: int) -> tuple[int, int]:
     return a, b
 
 
-_SIG_UDFS: dict[tuple[int, int], object] = {}
-
-
 def _minhash_sig_udf(num_perm: int, shingle_k: int):
     """Arrow-batch minhash signatures: normalized text in, the
     ``num_perm`` per-document minima out (array<bigint>) — one row per
@@ -279,10 +287,25 @@ def _minhash_sig_udf(num_perm: int, shingle_k: int):
     Replacing the aggregation removes the signature exchange AND the
     per-shingle row materialization from every minhash plan (guide
     §2.3/§2.4: the 64 mins per document are the only bytes that ever
-    needed to leave the scan stage)."""
-    cache_key = (num_perm, shingle_k)
-    if cache_key in _SIG_UDFS:
-        return _SIG_UDFS[cache_key]
+    needed to leave the scan stage).
+
+    As in ``_shingle_udf``, only the python batch function is cached;
+    the pandas_udf wrapper is built per call (per session)."""
+    import pandas as pd
+
+    sig_batch = _minhash_sig_batch_fn(num_perm, shingle_k)
+
+    @F.pandas_udf("array<bigint>")
+    def sig_udf(texts: pd.Series) -> pd.Series:
+        return sig_batch(texts)
+
+    return sig_udf.asNondeterministic()
+
+
+@functools.cache
+def _minhash_sig_batch_fn(num_perm: int, shingle_k: int):
+    """The python side of ``_minhash_sig_udf``: a batch of texts in,
+    their signatures out."""
     import numpy as np
     import pandas as pd
 
@@ -363,13 +386,7 @@ def _minhash_sig_udf(num_perm: int, shingle_k: int):
                 seg += 1
         return pd.Series(out)
 
-    @F.pandas_udf("array<bigint>")
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        return sig_batch(texts)
-
-    udf = sig_udf.asNondeterministic()
-    _SIG_UDFS[cache_key] = udf
-    return udf
+    return sig_batch
 
 
 def minhash_signatures_df(

@@ -481,7 +481,17 @@ def sniff_bytes(b: bytes | None) -> str:
 # Minimal binary → spans decoders (fixture-format subset).
 # ---------------------------------------------------------------------------
 
-_PDF_BLOCK_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
+# what a text-object scan must see outside strings: the start of a
+# literal string, a comment, a name, or BT/ET as a whole operator
+# token (not the name /BT, not inside DEBT or a string showing
+# "GRETA") — PDF 32000-1 §7.2.2 delimiters and whitespace bound every
+# token
+_PDF_REGULAR = rb"[^\s()<>\[\]{}/%]"
+_PDF_TEXT_OBJ_RE = re.compile(
+    rb"\(|%[^\r\n]*|/" + _PDF_REGULAR + rb"*"
+    + rb"|(?<!" + _PDF_REGULAR + rb")(?:BT|ET)(?!" + _PDF_REGULAR + rb")"
+)
+_PDF_PAREN_RE = re.compile(rb"\\.|[()]", re.DOTALL)
 _PDF_STR = rb"\(((?:[^()\\]|\\.)*)\)"
 _PDF_HEX = rb"<([0-9A-Fa-f\s]*)>"
 # text-show operators in stream order: `(s) Tj`, `<hex> Tj`, or
@@ -518,6 +528,47 @@ _PDF_ESCAPES = {
 }
 _DOCX_WT_RE = re.compile(r"<w:t(?:\s[^>]*)?>(.*?)</w:t>", re.DOTALL)
 _DOCX_PAGEBREAK = '<w:br w:type="page"/>'
+
+
+def _pdf_literal_end(b: bytes, start: int) -> int:
+    """End offset of the literal string opening at ``b[start] == "("``
+    (balanced parentheses, backslash escapes, §7.3.4.2). An unclosed
+    string runs to the end of ``b``: a malformed stream keeps the text
+    objects before it, and every byte is scanned at most once."""
+    depth = 0
+    for m in _PDF_PAREN_RE.finditer(b, start):
+        if m.group() == b"(":
+            depth += 1
+        elif m.group() == b")":
+            depth -= 1
+            if depth == 0:
+                return m.end()
+    return len(b)
+
+
+def _pdf_text_objects(b: bytes) -> list[bytes]:
+    """Bodies of the ``BT..ET`` text objects in ``b``, in order.
+
+    ``BT`` and ``ET`` count only as operator tokens outside literal
+    strings and comments; hex strings hold only hex digits, so they
+    cannot contain either token. A bare byte match would end a text
+    object at the ``ET`` of a shown ``(GRETA)`` and lose the rest of
+    the page."""
+    blocks: list[bytes] = []
+    start = None
+    pos = 0
+    while m := _PDF_TEXT_OBJ_RE.search(b, pos):
+        tok = m.group()
+        if tok == b"(":
+            pos = _pdf_literal_end(b, m.start())
+            continue
+        pos = m.end()
+        if tok == b"BT" and start is None:
+            start = pos
+        elif tok == b"ET" and start is not None:
+            blocks.append(b[start : m.start()])
+            start = None
+    return blocks
 
 
 def _pdf_unescape_bytes(s: bytes) -> bytes:
@@ -1890,7 +1941,7 @@ def _pdf_tree_pages(b: bytes) -> list[str] | None:
         pages.append(
             "\n".join(
                 t
-                for blk in _PDF_BLOCK_RE.findall(content)
+                for blk in _pdf_text_objects(content)
                 if (t := _pdf_block_text(blk, cmap, enc, fonts))
             )
         )
@@ -1927,7 +1978,7 @@ def decode_pdf_pages(b: bytes) -> list[str]:
     pages = []
 
     def raw_segment(seg: bytes) -> None:
-        for block in _PDF_BLOCK_RE.findall(seg):
+        for block in _pdf_text_objects(seg):
             text = _pdf_block_text(block, cmap, enc)
             if text:
                 pages.append(text)
@@ -1938,7 +1989,7 @@ def decode_pdf_pages(b: bytes) -> list[str]:
         content = _inflate_pdf_stream(m.group(1), m.group(2))
         text = "\n".join(
             t
-            for blk in _PDF_BLOCK_RE.findall(content)
+            for blk in _pdf_text_objects(content)
             if (t := _pdf_block_text(blk, cmap, enc))
         )
         if text:

@@ -18,6 +18,10 @@ Semantics:
     processed in waves (CheckpointedRun = emulated Iceberg snapshot
     commits): a killed run restarted with the same --output and
     --input-token skips every committed bucket;
+  * waves run two deep — the next wave extracts and writes while the
+    current one finishes its stats and commits — and commit strictly
+    in order, so a killed run loses at most the two uncommitted waves
+    in flight;
   * skew: the transform salts+repartitions on xxhash64(doc_id) before
     the per-kind extraction (--salt-partitions);
   * lineage + span/byte metrics are written per task per wave under
@@ -124,7 +128,10 @@ def main(argv: list[str] | None = None, stop: bool = True) -> None:
     # output plan, the keep-filter, and the audit would each recompute
     # extraction — ~3x the wave's dominant cost). The memo lives and
     # dies with the wave's DataFrame — an id()-keyed dict could alias
-    # a later wave onto a dead wave's entry after GC reuses the id.
+    # a later wave onto a dead wave's entry after GC reuses the id —
+    # and so needs no lock: two waves are in flight at once, each on
+    # its own thread with its own wave_in, and a wave's transform()
+    # and audit() both run on that wave's thread.
 
     def _extracted_and_verdict(df, salted):
         memo = getattr(df, "_etspark_gate_memo", None)

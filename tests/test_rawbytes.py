@@ -654,6 +654,26 @@ def test_legacy_office_spans_and_corrupt_guard(spark):
     assert out["c1"]["spans"] == []
 
 
+def test_pdf_et_inside_string_does_not_end_text_object():
+    """A shown string containing "ET" (GRETA) or "BT" (DEBT) leaves the
+    text object open: every later line of the page survives, in the
+    flat and tree layouts, plain and FlateDecode."""
+    from extractthinker_spark.operators.rawbytes import make_fixture_pdf_tree
+
+    pages = ["Employee: GRETA HOLM\nDEBT owed: 12.00\nTotal: 99.50",
+             "page two"]
+    for compress in (False, True):
+        assert decode_pdf_pages(
+            make_fixture_pdf(pages, compress=compress)
+        ) == pages
+        assert decode_pdf_pages(
+            make_fixture_pdf_tree(pages, compress=compress)
+        ) == pages
+    # the name /BT and a comment holding ET are not operators either
+    raw = b"%PDF-1.4\nBT /BT 9 Tf (a) Tj % ET\n0 -14 Td (b) Tj ET\n%%EOF"
+    assert decode_pdf_pages(raw) == ["a\nb"]
+
+
 def test_pdf_tree_order_and_hex_strings():
     """Page-tree PDFs decode in TREE order even when content streams
     are scrambled in the file; hex-string show operators (<hex> Tj and

@@ -4,6 +4,7 @@ checkpoint/resume (north_rule §9 of SURVEY.md build plan)."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pyspark.sql.functions as F
 import pytest
@@ -167,3 +168,156 @@ def test_checkpoint_resume(spark, docs, tmp_path):
         CheckpointedRun(out_b, n_buckets=8, input_token="t2").done_buckets()
         == set()
     )
+
+
+def _extract(df):
+    return extract_main_content(df, nest=True)
+
+
+def _failing_on_bucket(run, bucket):
+    """A transform whose write job fails on the docs of ``bucket``."""
+
+    def transform(df):
+        bad = F.when(
+            run.bucket_col() == bucket,
+            F.raise_error(F.lit(f"injected failure in bucket {bucket}")),
+        )
+        return _extract(df.filter(bad.isNull()))
+
+    return transform
+
+
+def test_checkpoint_in_flight_failure_resumes(spark, docs, tmp_path):
+    """Waves run two deep. A failure inside the second wave's compute
+    commits nothing after the first wave: the failed wave and the wave
+    behind it get no manifest. The resume rewrites none of the
+    committed buckets and ends equal to an uninterrupted run."""
+    single = CheckpointedRun(
+        str(tmp_path / "single"), n_buckets=8, wave_size=3, input_token="t1"
+    )
+    single.run(spark, docs, _extract)
+    expected = _span_tuples(single.read_output(spark))
+
+    out = str(tmp_path / "crashed")
+    run = CheckpointedRun(out, n_buckets=8, wave_size=3, input_token="t1")
+    # waves: [0, 1, 2], [3, 4, 5], [6, 7]; bucket 4 fails wave 1
+    with pytest.raises(Exception, match="injected failure in bucket 4"):
+        run.run(spark, docs, _failing_on_bucket(run, 4))
+    assert run.done_buckets() == {0, 1, 2}
+    assert {m["wave"] for m in run.manifests()} == {0}
+    # the wave behind the failed one was waited for, not left running
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("checkpoint-wave")
+    ]
+    mtimes = {
+        b: os.path.getmtime(run._bucket_data_dir(b))
+        for b in run.done_buckets()
+        if os.path.isdir(run._bucket_data_dir(b))
+    }
+
+    # The resume cuts its waves differently ([3, 4], [5, 6], [7]): the
+    # metrics the uncommitted wave [6, 7] wrote must not survive it.
+    resumed = CheckpointedRun(out, n_buckets=8, wave_size=2, input_token="t1")
+    stats = resumed.run(spark, docs, _extract)
+    assert stats["skipped_buckets"] == 3 and stats["waves_run"] == 3
+    assert not [n for n in os.listdir(out) if n.startswith("_tmp-wave-")]
+    for b, m in mtimes.items():
+        assert os.path.getmtime(run._bucket_data_dir(b)) == m
+    assert _span_tuples(run.read_output(spark)) == expected
+    assert sum(m["n_docs"] for m in run.manifests()) == N_DOCS
+    metrics = run.read_metrics(spark)
+    assert metrics.agg(F.sum("n_docs")).collect()[0][0] == N_DOCS
+
+
+def test_checkpoint_manifests_commit_in_wave_order(spark, docs, tmp_path):
+    run = CheckpointedRun(
+        str(tmp_path / "run"), n_buckets=8, wave_size=2, input_token="t"
+    )
+    assert run.run(spark, docs, _extract)["waves_run"] == 4
+    by_commit = sorted(
+        run.manifests(),
+        key=lambda m: os.stat(run._manifest_path(m["bucket"])).st_mtime_ns,
+    )
+    waves = [m["wave"] for m in by_commit]
+    assert waves == sorted(waves) and set(waves) == {0, 1, 2, 3}
+    for m in run.manifests():
+        assert m["wave"] == m["bucket"] // 2
+
+
+def test_checkpoint_empty_wave(spark, docs, tmp_path):
+    """A wave whose transform filters out every doc commits empty
+    buckets: manifests with zero counts, no data dirs, zero metrics."""
+    run = CheckpointedRun(
+        str(tmp_path / "run"), n_buckets=8, wave_size=4, input_token="t"
+    )
+
+    def first_wave_only(df):
+        return _extract(df.filter(run.bucket_col() < 4))
+
+    stats = run.run(spark, docs, first_wave_only)
+    assert stats["waves_run"] == 2
+    assert run.done_buckets() == set(range(8))
+    empty = [m for m in run.manifests() if m["bucket"] >= 4]
+    assert [m["n_docs"] for m in empty] == [0] * 4
+    assert not any(
+        os.path.isdir(run._bucket_data_dir(b)) for b in range(4, 8)
+    )
+    n_out = run.read_output(spark).count()
+    assert n_out == stats["docs"] > 0
+    metrics = run.read_metrics(spark)
+    assert metrics.agg(F.sum("n_docs")).collect()[0][0] == n_out
+    assert metrics.filter(F.col("wave") == 1).count() == 0
+
+
+def test_checkpoint_quality_gate_rejecting_everything(spark, tmp_path):
+    """--quality-gate with a threshold no document meets: every wave is
+    empty, every bucket still commits, and the audit holds every doc."""
+    import jobs.extract_job as job
+
+    out = str(tmp_path / "gated")
+    job.main([
+        "--synthetic", "30", "--output", out, "--input-token", "q",
+        "--n-buckets", "4", "--wave-size", "1", "--quality-gate",
+        "--quality-thresholds", '{"min_words": 1000000}',
+    ], stop=False)
+    run = CheckpointedRun(out, n_buckets=4, wave_size=1, input_token="q")
+    assert run.done_buckets() == {0, 1, 2, 3}
+    assert sum(m["n_docs"] for m in run.manifests()) == 0
+    audit = run.read_audit(spark, "quality")
+    assert audit.count() == 30
+    assert audit.filter(F.col("keep")).count() == 0
+
+
+def test_checkpoint_labels_wave_jobs(spark, docs, tmp_path):
+    """Each wave's jobs run under the job group and description
+    ``checkpoint wave <n> buckets <lo>-<hi>``, set in the wave's own
+    thread; a job group the caller already set is kept instead."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    labels = ["checkpoint wave 0 buckets 0-3", "checkpoint wave 1 buckets 4-5"]
+
+    def jobs_of(group):
+        return set(tracker.getJobIdsForGroup(group))
+
+    before = {g: jobs_of(g) for g in labels}
+    CheckpointedRun(
+        str(tmp_path / "own"), n_buckets=6, wave_size=4, input_token="t"
+    ).run(spark, docs, _extract)
+    for g in labels:
+        assert jobs_of(g) - before[g], g
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+    before = {g: jobs_of(g) for g in [*labels, "outer"]}
+    sc.setJobGroup("outer", "outer")
+    try:
+        CheckpointedRun(
+            str(tmp_path / "outer"), n_buckets=6, wave_size=4,
+            input_token="t",
+        ).run(spark, docs, _extract)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for g in labels:
+        assert jobs_of(g) == before[g], g
+    assert jobs_of("outer") - before["outer"]

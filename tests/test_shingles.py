@@ -181,3 +181,49 @@ def test_char_shingles_numpy_path_matches_loop(spark):
     # reference replays that for this plain-ASCII fixture
     assert big == ref(body)
     assert small == ref(body[:200])
+
+
+_RESTART_SCRIPT = """
+import json
+from extractthinker_spark.operators.dedup import dedup_minhash
+from extractthinker_spark.session import get_spark
+
+rows = [(i, ("the quick brown fox jumps over the lazy dog %d " % (i // 2)) * 5)
+        for i in range(20)]
+runs = []
+for _ in range(2):
+    spark = get_spark("restart", master="local[2]", shuffle_partitions=4)
+    df = spark.createDataFrame(rows, "id long, text string")
+    pairs = dedup_minhash(df, "id", "text", threshold=0.5)
+    runs.append(sorted([list(r) for r in pairs.collect()]))
+    spark.stop()
+print(json.dumps(runs))
+"""
+
+
+def test_dedup_minhash_survives_session_restart():
+    """The shingle and signature UDFs are rebuilt per session: a process
+    that stops its SparkSession and starts a new one gets the same
+    pairs, and no task reports into the stopped context's accumulator
+    (the symptom of a UDF object cached across sessions)."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (root, os.environ.get("PYTHONPATH")) if p
+        ),
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        capture_output=True, text=True, cwd=root, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert first and first == second
+    assert "Failed to update accumulator" not in proc.stderr
