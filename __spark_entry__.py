@@ -533,8 +533,7 @@ def _q_ann_ivf(spark, sf):
     )
     q = e.filter(F.col("vec_id") < 20)
     return ann_topk_ivf_portable(
-        e, q, k=5, n_lists=16, n_probe=4, iters=2, sample_pct=60,
-        impl="arrow",
+        e, q, k=5, n_lists=16, n_probe=4, iters=2, sample_pct=60
     )
 
 
@@ -1015,10 +1014,9 @@ def _repetition_core_sql(t_ctes: str) -> str:
     ``t(doc_id, txt)`` — shared by the repetition_features oracle
     (planted-duplicate construction) and the gopher_filter oracle (raw
     document text). Generated from the same metric inventory
-    (TOP_GRAM_NS / DUP_GRAM_NS) as the Spark impls, so the three forms
-    (Arrow production, Catalyst twin, this oracle) can never drift on
-    WHICH metrics exist — only the math could drift, and that is
-    pinned value-level by the driver."""
+    (TOP_GRAM_NS / DUP_GRAM_NS) as repetition_features, so the two
+    forms can never drift on WHICH metrics exist — only the math could
+    drift, and that is pinned value-level by the driver."""
     from extractthinker_spark.functions.textstats import (
         DUP_GRAM_NS,
         TOP_GRAM_NS,
@@ -3755,6 +3753,32 @@ def _truncate_sql(budget: int = 40) -> str:
     """
 
 
+def _winnow_fps_sql(src: str) -> str:
+    """DuckDB twin of dedup.winnow_fingerprints (k=8, window=4) over a
+    ``src`` relation yielding (doc_id, text): (doc_id, fps) with fps
+    the sorted distinct window minima of the mod-2^31-1 k-gram hashes
+    of the normalized text."""
+    return rf"""
+        WITH n AS (SELECT doc_id,
+              lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
+              FROM {src}),
+        h AS (SELECT doc_id,
+              list_transform(
+                generate_series(1, greatest(length(norm) - 7, 1)),
+                i -> list_reduce(
+                       -- chars past the end hash as 0 (DuckDB
+                       -- ord('') = -1 -> clamp)
+                       list_transform(generate_series(0, 7),
+                         j -> greatest(ord(substring(norm, i + j, 1)), 0)::BIGINT),
+                       (a, b) -> (a * 31 + b) % 2147483647)) AS hashes
+              FROM n)
+        SELECT doc_id,
+              list_sort(list_distinct(list_transform(
+                generate_series(1, greatest(len(hashes) - 3, 1)),
+                i -> list_aggregate(hashes[i:i+3], 'min')))) AS fps
+        FROM h"""
+
+
 def oracle_sql() -> dict[str, str]:
     sql = {}
     sql["tokenize_count"] = f"""
@@ -3851,29 +3875,12 @@ def oracle_sql() -> dict[str, str]:
                count(*) AS dup_count
         FROM all_docs GROUP BY 1 HAVING count(*) > 1
     """
-    sql["winnow_fingerprint_overlap"] = r"""
+    sql["winnow_fingerprint_overlap"] = f"""
         WITH all_docs AS (
           SELECT doc_id, text FROM documents WHERE doc_id < 120
           UNION ALL
           SELECT doc_id + 100000, text FROM documents WHERE doc_id < 12),
-        n AS (SELECT doc_id,
-              lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-              FROM all_docs),
-        h AS (SELECT doc_id,
-              list_transform(
-                generate_series(1, greatest(length(norm) - 7, 1)),
-                i -> list_reduce(
-                       -- chars past the end hash as 0 (Spark ascii('')
-                       -- = 0; DuckDB ord('') = -1 -> clamp)
-                       list_transform(generate_series(0, 7),
-                         j -> greatest(ord(substring(norm, i + j, 1)), 0)::BIGINT),
-                       (a, b) -> (a * 31 + b) % 2147483647)) AS hashes
-              FROM n),
-        w AS (SELECT doc_id,
-              list_sort(list_distinct(list_transform(
-                generate_series(1, greatest(len(hashes) - 3, 1)),
-                i -> list_aggregate(hashes[i:i+3], 'min')))) AS fps
-              FROM h),
+        w AS ({_winnow_fps_sql("all_docs")}),
         p AS (SELECT doc_id, unnest(fps) AS f FROM w)
         SELECT a.doc_id AS a, b.doc_id AS b,
                count(*) AS shared_fps

@@ -12,14 +12,9 @@ costs one Arrow pass, no vocabulary, no shuffle, no model distribution
 problem.
 
 Hashing is the md5-portable scheme (NOTES.md), so the whole embedding
-is replayable in ANSI SQL for value-level oracles. Two
-implementations, parity-pinned by pytest:
-
-* ``impl='arrow'`` — production: one pandas UDF, hashlib + a numpy
-  accumulate per batch.
-* ``impl='catalyst'`` — oracle-shaped twin: per-token (bucket, sign)
-  structs once via ``transform``, then a ``dim``-wide fold. O(dim·n)
-  adds per doc; kept for the DuckDB mirror and plan comparisons.
+is replayable in ANSI SQL for value-level oracles
+(``__spark_entry__._hashed_emb_sql``). One pandas UDF: hashlib + a
+numpy accumulate per batch.
 
 The reference has no embedding path (it ships texts to LLM APIs);
 brief-mandated LLM-pipeline tooling like the ANN family itself.
@@ -30,70 +25,15 @@ import pandas as pd  # module-top: pandas_udf hint resolution (NOTES.md)
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-#: token pattern shared by both impls and the SQL twin (RE2 ∩ Java)
+#: token pattern shared with the SQL twin (RE2 ∩ Python re)
 TOKEN_RE = "[a-z0-9]+"
 
 
-def _bucket_sign_exprs(tok: Column, dim: int, seed: str) -> tuple[Column, Column]:
-    """(bucket, sign) for one token: md5 halves → bucket = h1 mod dim,
-    sign = +1/−1 from h2 parity. Same arithmetic as the SQL twin."""
-    h = F.md5(F.concat(tok, F.lit("|" + seed)).cast("binary"))
-    h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(h, 17, 15), 16, 10).cast("long")
-    return h1 % dim, F.when(h2 % 2 == 0, 1).otherwise(-1)
-
-
-def hashed_embedding(
-    text: Column,
-    dim: int = 64,
-    seed: str = "emb",
-    impl: str = "arrow",
-) -> Column:
+def hashed_embedding(text: Column, dim: int = 64, seed: str = "emb") -> Column:
     """``array<double>`` L2-normalized signed-count embedding of a
-    text column. All-zero token-free texts embed to the zero vector
-    (normalization guards the 0/0)."""
-    if impl == "arrow":
-        return _hashed_embedding_arrow(text, dim, seed)
-    if impl != "catalyst":
-        raise ValueError(f"unknown impl {impl!r}")
-    toks = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), F.lit(0))
-    pairs_col = F.transform(
-        toks,
-        lambda t: F.struct(*_pair_struct(t, dim, seed)),
-    )
-
-    def fold(pairs: Column) -> Column:
-        raw = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: F.aggregate(
-                pairs,
-                F.lit(0).cast("long"),
-                lambda acc, p: acc
-                + F.when(p["b"] == i.cast("long"), p["s"]).otherwise(0),
-            ).cast("double"),
-        )
-
-        def norm(v: Column) -> Column:
-            n = F.sqrt(
-                F.aggregate(
-                    v, F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            )
-            return F.transform(
-                v, lambda x: F.when(n > 0, x / n).otherwise(0.0)
-            )
-
-        return norm(raw)
-
-    return fold(pairs_col)
-
-
-def _pair_struct(t: Column, dim: int, seed: str):
-    b, s = _bucket_sign_exprs(t, dim, seed)
-    return (b.alias("b"), s.cast("long").alias("s"))
-
-
-def _hashed_embedding_arrow(text: Column, dim: int, seed: str) -> Column:
+    text column: each token's md5 halves give bucket = h1 mod dim and
+    sign = +1/−1 from h2 parity. All-zero token-free texts (and NULL)
+    embed to the zero vector (normalization guards the 0/0)."""
     import hashlib
     import re as _re
 
@@ -115,7 +55,7 @@ def _hashed_embedding_arrow(text: Column, dim: int, seed: str) -> Column:
             v /= n
         return [float(x) for x in v]
 
-    @F.pandas_udf(f"array<double>")
+    @F.pandas_udf("array<double>")
     def _emb(s: pd.Series) -> pd.Series:
         return pd.Series([one(t) for t in s])
 
@@ -128,12 +68,11 @@ def embed_documents(
     key: str = "doc_id",
     dim: int = 64,
     seed: str = "emb",
-    impl: str = "arrow",
     out_col: str = "vec",
 ) -> DataFrame:
     """(key, vec) frame ready for the similarity family
     (``cosine_near_dups``, ``brute_force_topk``, ``ann_topk_*``,
     ``quantize_embeddings``)."""
     return df.select(
-        key, hashed_embedding(F.col(text_col), dim, seed, impl).alias(out_col)
+        key, hashed_embedding(F.col(text_col), dim, seed).alias(out_col)
     )

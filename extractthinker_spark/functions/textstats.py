@@ -1,4 +1,4 @@
-"""Text-analysis column expressions — all pure Catalyst (JVM, codegen).
+"""Text-analysis column expressions and per-document Arrow passes.
 
 Token counting here is the SAME spec as functions/tokens.py (the
 reference's simple_token_counter, utils.py:125-165) expressed as a
@@ -13,6 +13,8 @@ __spark_entry__.oracle_sql().
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd  # module-top: pandas_udf type hints resolve here
 import pyspark.sql.functions as F
@@ -102,7 +104,7 @@ def quality_features(text: Column) -> dict[str, Column]:
 GOPHER_STOPWORDS_8 = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 # Repetition metric inventory (Rae et al. 2021, Table A1), shared by
-# the Arrow impl, the Catalyst twin, and the DuckDB oracle generator:
+# repetition_features and the DuckDB oracle generator:
 # top-n-gram char fractions for n=2..4, duplicate-n-gram char
 # fractions for n=5..10 (plus the legacy dup-trigram signal kept from
 # earlier rounds). Character accounting uses the sum-of-occurrence
@@ -143,8 +145,8 @@ def _round4(x: float) -> float:
 
 def _repetition_metrics_py(text: str) -> dict[str, float]:
     """Per-document repetition + word features, pure Python/Counter —
-    the zero-shuffle production path. Must stay value-identical to the
-    Catalyst twin below (pinned by tests + the driver oracle):
+    the body of :func:`repetition_features`. Must stay value-identical
+    to the DuckDB oracle twin (pinned by tests + the driver oracle):
     non-empty = Spark trim semantics (strips 0x20 ONLY), words =
     ``[a-z]+`` over lower(text), gram chars = len(gram) - (n-1)
     (single-space joins over pure-letter words), fractions = integer
@@ -223,7 +225,6 @@ def repetition_features(
     df,
     key: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
     with_word_features: bool = False,
 ):
     """Gopher repetition signals (Rae et al. 2021, Table A1):
@@ -242,143 +243,30 @@ def repetition_features(
     stopword_hits, stop_distinct) so :func:`gopher_filter` is a single
     pass over the text.
 
-    Every statistic is per-document, so the PRODUCTION path
-    (``impl='arrow'``) is one zero-shuffle ``mapInPandas`` pass:
-    Counter/regex per doc, grams never leave the document. The
-    ``impl='catalyst'`` twin expresses the same math as explode +
-    map-side-combinable groupBy per gram family — kept because it is
-    the ANSI-SQL-shaped form the DuckDB oracle replays, and as the
-    cross-impl equality anchor (tests pin arrow == catalyst). Both
-    use the identical float protocol: integer sums (exact in f64) →
-    one double division → HALF_UP round(4), so results are
-    bit-identical across impls and engines.
+    Every statistic is per-document, so the whole operator is one
+    zero-shuffle ``mapInPandas`` pass: Counter/regex per doc, grams
+    never leave the document. The DuckDB oracle
+    (``__spark_entry__._repetition_core_sql``) replays the same math
+    as explode + groupBy per gram family with the identical float
+    protocol: integer sums (exact in f64) → one double division →
+    HALF_UP round(4), so results are bit-identical across engines.
     """
-    if impl == "arrow":
-        import pandas as pd
+    schema = _repetition_schema(df, key, with_word_features)
+    names = [f.name for f in schema.fields]
+    int_cols = {"n_words", "stopword_hits", "stop_distinct"}
 
-        schema = _repetition_schema(df, key, with_word_features)
-        names = [f.name for f in schema.fields]
-        int_cols = {"n_words", "stopword_hits", "stop_distinct"}
+    def gen(batches):
+        for pdf in batches:
+            rows = []
+            for k, t in zip(pdf[key], pdf[text_col]):
+                m = _repetition_metrics_py(t if t is not None else "")
+                rows.append([k] + [m[c] for c in names[1:]])
+            out = pd.DataFrame(rows, columns=names)
+            for c in int_cols & set(names):
+                out[c] = out[c].astype("int64")
+            yield out
 
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for k, t in zip(pdf[key], pdf[text_col]):
-                    m = _repetition_metrics_py(t if t is not None else "")
-                    rows.append([k] + [m[c] for c in names[1:]])
-                out = pd.DataFrame(rows, columns=names)
-                for c in int_cols & set(names):
-                    out[c] = out[c].astype("int64")
-                yield out
-
-        return df.select(key, text_col).mapInPandas(gen, schema=schema)
-
-    if impl != "catalyst":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    import pyspark.sql.functions as F  # local alias for clarity
-
-    text = F.col(text_col)
-    base = df.select(F.col(key).alias(key), text.alias("_t"))
-
-    def seg_stats(sep: str, prefix: str):
-        arr = F.filter(
-            F.split(F.col("_t"), sep), lambda l: F.length(F.trim(l)) > 0
-        )
-        return (
-            base.select(key, F.explode(arr).alias("seg"))
-            .groupBy(key, "seg")
-            .agg(F.count("*").alias("cnt"))
-            .groupBy(key)
-            .agg(
-                F.round(1 - F.count("*") / F.sum("cnt"), 4)
-                .alias(f"dup_{prefix}_frac"),
-                F.round(
-                    F.sum(F.length("seg") * (F.col("cnt") - 1))
-                    / F.sum(F.length("seg") * F.col("cnt")),
-                    4,
-                ).alias(f"dup_{prefix}_char_frac"),
-            )
-        )
-
-    line_stats = seg_stats("\n", "line")
-    para_stats = seg_stats("\n\n", "para")
-
-    words = F.regexp_extract_all(F.lower(F.col("_t")), F.lit(r"[a-z]+"), F.lit(0))
-    nw = F.size(words)
-    word_chars = F.aggregate(
-        words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-    )
-
-    def grams(n: int):
-        parts = [
-            F.slice(words, i + 1, F.greatest(nw - (n - 1), F.lit(0)))
-            for i in range(n)
-        ]
-        g = parts[0]
-        for p in parts[1:]:
-            g = F.zip_with(g, p, lambda a, b: F.concat(a, F.lit(" "), b))
-        return g
-
-    all_ns = sorted(set(TOP_GRAM_NS) | set(DUP_GRAM_NS))
-    wbase = base.select(
-        key, word_chars.alias("wc"),
-        *[grams(n).alias(f"g{n}") for n in all_ns],
-    )
-
-    def gram_rollup(n: int):
-        # grams are single-space-joined pure-letter words, so letter
-        # count == len(gram) - (n-1); each family is ONE explode +
-        # map-side-combinable groupBy + per-key rollup.
-        groups = (
-            wbase.select(key, "wc", F.explode(f"g{n}").alias("g"))
-            .groupBy(key, "g")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.first("wc").alias("wc"),
-                (F.length(F.first("g")) - (n - 1)).alias("gchars"),
-            )
-        )
-        aggs = []
-        if n in TOP_GRAM_NS:
-            top = F.max(F.struct(F.col("cnt"), F.col("g"), F.col("gchars")))
-            aggs.append(
-                F.round(top["cnt"] * top["gchars"] / F.first("wc"), 4)
-                .alias(_top_col(n))
-            )
-        if n in DUP_GRAM_NS:
-            aggs.append(
-                F.round(
-                    F.sum(F.col("gchars") * (F.col("cnt") - 1))
-                    / F.first("wc"), 4,
-                ).alias(_dup_col(n))
-            )
-        return groups.groupBy(key).agg(*aggs)
-
-    if with_word_features:
-        stop_hits = F.size(
-            F.filter(words, lambda w: w.isin(*EN_STOPWORDS))
-        )
-        stop_distinct = F.size(
-            F.array_distinct(
-                F.filter(words, lambda w: w.isin(*GOPHER_STOPWORDS_8))
-            )
-        )
-        keys = base.select(
-            key,
-            nw.cast("long").alias("n_words"),
-            F.when(nw > 0, F.round(word_chars / nw, 4))
-            .otherwise(0.0).alias("avg_word_len"),
-            stop_hits.cast("long").alias("stopword_hits"),
-            stop_distinct.cast("long").alias("stop_distinct"),
-        )
-    else:
-        keys = base.select(key)
-    out = keys.join(line_stats, key, "left").join(para_stats, key, "left")
-    for n in all_ns:
-        out = out.join(gram_rollup(n), key, "left")
-    lead = [key] + (WORD_FEATURE_COLS if with_word_features else [])
-    return out.na.fill(0.0, REPETITION_COLS).select(*lead, *REPETITION_COLS)
+    return df.select(key, text_col).mapInPandas(gen, schema=schema)
 
 
 GOPHER_THRESHOLDS: dict[str, float | None] = {
@@ -441,7 +329,6 @@ def gopher_filter(
     key: str = "doc_id",
     text_col: str = "text",
     thresholds: dict | None = None,
-    impl: str = "arrow",
 ):
     """The Gopher quality GATE (Rae et al. 2021, Table A1): word/
     length/stopword heuristics + the full repetition signal set →
@@ -451,16 +338,13 @@ def gopher_filter(
     keep).
 
     Single pass over the text: the word features ride along inside
-    :func:`repetition_features` (``with_word_features=True``) — with
-    ``impl='arrow'`` the whole gate is one zero-shuffle mapInPandas
-    stage plus cheap expression post-processing; ``impl='catalyst'``
-    is the oracle-shaped twin.
+    :func:`repetition_features` (``with_word_features=True``), so the
+    whole gate is one zero-shuffle mapInPandas stage plus cheap
+    expression post-processing.
     """
-    import pyspark.sql.functions as F
-
     t = {**GOPHER_THRESHOLDS, **(thresholds or {})}
     feats = repetition_features(
-        df, key=key, text_col=text_col, impl=impl, with_word_features=True
+        df, key=key, text_col=text_col, with_word_features=True
     )
     reason = None
     for label, col, op, tkey in GOPHER_GATE_RULES:
@@ -499,16 +383,16 @@ def quality_score(text: Column) -> Column:
 #      Common-Crawl scale ~half the web is non-Latin-script; a
 #      stopword vote alone returns 'und' for all of it).
 #   2. Latin-script tie → expanded stopword vote (20 languages,
-#      ASCII-only word lists so Java and RE2 agree on \b).
-# Both the Spark expression and the DuckDB oracle SQL are GENERATED
-# from these tables (same rule as GOPHER_GATE_RULES), so the two
-# engines cannot drift on inventory.
+#      ASCII-only word lists so Python and RE2 agree on \b).
+# Both the compiled patterns below and the DuckDB oracle SQL are
+# GENERATED from these tables (same rule as GOPHER_GATE_RULES), so the
+# two engines cannot drift on inventory.
 
 # (code, [(lo, hi) BMP codepoint ranges]) in PRECEDENCE order — ties
 # on equal character counts resolve to the earlier row. Kana before
 # Han: Japanese text always carries kana, Chinese never does, so the
 # zh/ja split is "any kana → ja" (s_zh is zeroed when kana > 0 and
-# s_ja counts kana+han, see lang_scores()).
+# s_ja counts kana+han, see _lang_base_id()).
 LANG_SCRIPTS: list[tuple[str, list[tuple[int, int]]]] = [
     ("ja", [(0x3040, 0x30FF)]),                    # hiragana+katakana
     ("ko", [(0xAC00, 0xD7A3), (0x1100, 0x11FF)]),  # hangul + jamo
@@ -525,8 +409,8 @@ LANG_SCRIPTS: list[tuple[str, list[tuple[int, int]]]] = [
     ("hy", [(0x0530, 0x058F)]),                    # armenian
 ]
 
-# ASCII-only stopword lists (~15 distinctive words each): Java's
-# default \b and RE2's \b are both ASCII-\w based, so accent-free
+# ASCII-only stopword lists (~15 distinctive words each): Python's
+# re.ASCII \b and RE2's \b are both ASCII-\w based, so accent-free
 # lists keep the two engines' boundary semantics identical. Overlaps
 # across related languages are fine — the vote is max-hits.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -574,11 +458,6 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
-def _script_class_java(ranges: list[tuple[int, int]]) -> str:
-    """Java-regex char class matching the script's BMP ranges."""
-    return "[" + "".join(chr(lo) + "-" + chr(hi) for lo, hi in ranges) + "]"
-
-
 def script_class_re2(ranges: list[tuple[int, int]]) -> str:
     """RE2 (DuckDB) char class — \\x{..} escapes keep the SQL ASCII."""
     body = "".join(
@@ -588,98 +467,59 @@ def script_class_re2(ranges: list[tuple[int, int]]) -> str:
 
 
 def stopword_regex(code: str) -> str:
-    r"""``\b(w1|w2|...)\b`` vote regex — identical in Java and RE2 for
-    ASCII-only words (both engines' \b is ASCII-\w based)."""
+    r"""``\b(w1|w2|...)\b`` vote regex — identical in Python
+    (``re.ASCII``) and RE2 for ASCII-only words (both engines' \b is
+    ASCII-\w based)."""
     return r"\b(" + "|".join(LANG_STOPWORDS[code]) + r")\b"
 
 
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    """Per-script character counts in LANG_SCRIPTS precedence order,
-    with the zh/ja kana rule applied: any kana present zeroes zh and
-    folds han into ja's score (Japanese prose is kana+kanji; Chinese
-    has no kana). Each count = length - length(strip script chars) —
-    one codegen'd regex pass per script, no UDF."""
-    def cnt(ranges: list[tuple[int, int]]) -> Column:
-        cls = _script_class_java(ranges)
-        return F.length(text) - F.length(F.regexp_replace(text, cls, ""))
+# Stage-1/2 patterns, compiled once per process. Script classes are
+# literal codepoint ranges; stopword regexes run under ``re.ASCII`` so
+# Python's \b matches RE2's ASCII word boundary (the oracle twin).
+_SCRIPT_PATS = [
+    (code, re.compile(
+        "[" + "".join(chr(lo) + "-" + chr(hi) for lo, hi in ranges) + "]"
+    ))
+    for code, ranges in LANG_SCRIPTS
+]
+_LATIN_PAT = re.compile("[A-Za-z]")
+_VOTE_PATS = [
+    (code, re.compile(stopword_regex(code), re.ASCII))
+    for code in sorted(LANG_STOPWORDS)
+]
 
-    raw = {code: cnt(ranges) for code, ranges in LANG_SCRIPTS}
+
+def _lang_base_id(t: str) -> str:
+    """Two-stage verdict for a non-empty text: every stage is integer
+    counts compared with fixed tie-breaks, so it is bit-equal to the
+    generated DuckDB twin."""
+    raw = {c: len(p.findall(t)) for c, p in _SCRIPT_PATS}
     kana, han = raw["ja"], raw["zh"]
-    scored = []
-    for code, _ in LANG_SCRIPTS:
+    best_s, best_s_code = -1, "und"
+    for code, _p in _SCRIPT_PATS:
         if code == "ja":
-            scored.append((code, F.when(kana > 0, kana + han).otherwise(0)))
+            hits = kana + han if kana > 0 else 0
         elif code == "zh":
-            scored.append((code, F.when(kana > 0, F.lit(0)).otherwise(han)))
+            hits = 0 if kana > 0 else han
         else:
-            scored.append((code, raw[code]))
-    return scored
+            hits = raw[code]
+        if hits > best_s:       # strictly greater: first max wins
+            best_s, best_s_code = hits, code
+    latin = len(_LATIN_PAT.findall(t))
+    if best_s > latin:
+        return best_s_code
+    low = t.lower()
+    best_v, best_v_code = 0, "und"
+    for code, p in _VOTE_PATS:
+        hits = len(p.findall(low))
+        if hits > best_v:       # ties → lexically smallest code
+            best_v, best_v_code = hits, code
+    if best_v > 0:
+        return best_v_code
+    return best_s_code if best_s > 0 else "und"
 
 
-def _let1(expr: Column, body) -> Column:
-    """Bind ``expr`` once (CSE across when-branches — see NOTES.md on
-    per-branch re-inlining)."""
-    return F.transform(F.array(expr), body)[0]
-
-
-def lang_id_arrow(text: Column) -> Column:
-    """Zero-shuffle Arrow twin of :func:`lang_id` — EXACTLY equal
-    output (every stage is integer counts compared with the same
-    tie-breaks; stopword regexes run under ``re.ASCII`` so Python's
-    ``\\b`` matches Java's and RE2's ASCII word boundary). One
-    compiled-regex pass per table row instead of ~35 JVM regex scans
-    per document — the production path for corpus-wide curation, same
-    rule as repetition_features' ``impl='arrow'``."""
-    import re as _re
-
-    script_pats = []
-    for code, ranges in LANG_SCRIPTS:
-        cls = "[" + "".join(
-            chr(lo) + "-" + chr(hi) for lo, hi in ranges
-        ) + "]"
-        script_pats.append((code, _re.compile(cls)))
-    latin_pat = _re.compile("[A-Za-z]")
-    vote_pats = [
-        (code, _re.compile(stopword_regex(code), _re.ASCII))
-        for code in sorted(LANG_STOPWORDS)
-    ]
-
-    def one(t: str | None) -> str:
-        if not t:
-            return "und"
-        raw = {c: len(p.findall(t)) for c, p in script_pats}
-        kana, han = raw["ja"], raw["zh"]
-        best_s, best_s_code = -1, "und"
-        for code, _p in script_pats:
-            if code == "ja":
-                hits = kana + han if kana > 0 else 0
-            elif code == "zh":
-                hits = 0 if kana > 0 else han
-            else:
-                hits = raw[code]
-            if hits > best_s:       # strictly greater: first max wins
-                best_s, best_s_code = hits, code
-        latin = len(latin_pat.findall(t))
-        if best_s > latin:
-            return best_s_code
-        low = t.lower()
-        best_v, best_v_code = 0, "und"
-        for code, p in vote_pats:
-            hits = len(p.findall(low))
-            if hits > best_v:       # ties → lexically smallest code
-                best_v, best_v_code = hits, code
-        if best_v > 0:
-            return best_v_code
-        return best_s_code if best_s > 0 else "und"
-
-    @F.pandas_udf("string")
-    def _lid(texts: pd.Series) -> pd.Series:
-        return pd.Series([one(t) for t in texts])
-
-    return _lid(text)
-
-
-def lang_id(text: Column, impl: str = "arrow") -> Column:
+def lang_id(text: Column) -> Column:
     """Web-scale deterministic language ID.
 
     Stage 1: Unicode-script histogram — the winning non-Latin script
@@ -689,57 +529,14 @@ def lang_id(text: Column, impl: str = "arrow") -> Column:
     hits falls back to any non-zero script evidence, else 'und'.
     All-integer comparisons → bit-exact vs the generated DuckDB twin.
 
-    ``impl='arrow'`` (default) runs the one-pass compiled-regex twin
-    (:func:`lang_id_arrow`, parity-pinned); ``impl='expr'`` is the
-    oracle-shaped Catalyst expression.
+    One pandas UDF over the patterns compiled once per process.
     """
-    if impl == "arrow":
-        return lang_id_arrow(text)
-    latin = F.length(text) - F.length(
-        F.regexp_replace(text, "[A-Za-z]", "")
-    )
-    scripts = lang_scores(text)
-    low = F.lower(text)
-    votes = [
-        (code,
-         F.size(F.regexp_extract_all(low, F.lit(stopword_regex(code)),
-                                     F.lit(0))))
-        for code in sorted(LANG_STOPWORDS)
-    ]
 
-    # one struct holds every count — the regex passes run ONCE; the
-    # decision below only references lambda-bound struct fields.
-    packed = F.struct(
-        latin.alias("latin"),
-        *[c.alias("s_" + code) for code, c in scripts],
-        *[c.alias("v_" + code) for code, c in votes],
-    )
+    @F.pandas_udf("string")
+    def _lid(texts: pd.Series) -> pd.Series:
+        return pd.Series([_lang_base_id(t) if t else "und" for t in texts])
 
-    def decide(c: Column) -> Column:
-        best_script = F.array_max(F.array(*[
-            F.struct(
-                c["s_" + code].alias("hits"),
-                F.lit(-i).alias("prec"),        # ties → earlier row
-                F.lit(code).alias("code"),
-            )
-            for i, (code, _) in enumerate(LANG_SCRIPTS)
-        ]))
-        best_vote = F.array_max(F.array(*[
-            F.struct(
-                c["v_" + code].alias("hits"),
-                F.lit(-i).alias("prec"),        # ties → smaller code
-                F.lit(code).alias("code"),
-            )
-            for i, code in enumerate(sorted(LANG_STOPWORDS))
-        ]))
-        return (
-            F.when(best_script["hits"] > c["latin"], best_script["code"])
-            .when(best_vote["hits"] > 0, best_vote["code"])
-            .when(best_script["hits"] > 0, best_script["code"])
-            .otherwise("und")
-        )
-
-    return _let1(packed, decide)
+    return _lid(text)
 
 
 # --- C4-style heuristic cleaning (Raffel et al. 2020, §2.2) ---------------
@@ -898,84 +695,47 @@ LANG_SCRIPT_REFINE: dict[str, list[tuple[str, str, list[str]]]] = {
 }
 
 
+# LANG_SCRIPT_REFINE compiled once: (code, char set, word regex|None)
+_REFINE_PATS = {
+    base: [
+        (
+            code,
+            set(chars),
+            re.compile(r"\b(" + "|".join(words) + r")\b", re.ASCII)
+            if words else None,
+        )
+        for code, chars, words in rules
+    ]
+    for base, rules in LANG_SCRIPT_REFINE.items()
+}
+
+
+def _lang_fine_id(t: str) -> str:
+    base = _lang_base_id(t)
+    rules = _REFINE_PATS.get(base)
+    if not rules:
+        return base
+    low = t.lower()
+    best, best_code = 0, base
+    for code, chars, word_pat in rules:
+        hits = sum(1 for ch in t if ch in chars)
+        if word_pat is not None:
+            hits += len(word_pat.findall(low))
+        if hits > best:
+            best, best_code = hits, code
+    return best_code
+
+
 def lang_id_fine(text: Column) -> Column:
     """lang_id plus within-script refinement: where the two-stage ID
     returns a script-level verdict (Cyrillic → 'ru', Arabic script →
     'ar'), count each candidate language's DISTINCTIVE codepoints and
     rebadge to the strict winner (ties or zero evidence keep the
-    script default). One Arrow pass — shares lang_id_arrow's stage-1/2
-    logic, so non-refined verdicts are identical to ``lang_id``."""
-    import re as _re
-
-    script_pats = []
-    for code, ranges in LANG_SCRIPTS:
-        cls = "[" + "".join(
-            chr(lo) + "-" + chr(hi) for lo, hi in ranges
-        ) + "]"
-        script_pats.append((code, _re.compile(cls)))
-    latin_pat = _re.compile("[A-Za-z]")
-    vote_pats = [
-        (code, _re.compile(stopword_regex(code), _re.ASCII))
-        for code in sorted(LANG_STOPWORDS)
-    ]
-    refine_sets = {
-        base: [
-            (
-                code,
-                set(chars),
-                _re.compile(r"\b(" + "|".join(words) + r")\b", _re.ASCII)
-                if words else None,
-            )
-            for code, chars, words in rules
-        ]
-        for base, rules in LANG_SCRIPT_REFINE.items()
-    }
-
-    def base_id(t: str) -> str:
-        raw = {c: len(p.findall(t)) for c, p in script_pats}
-        kana, han = raw["ja"], raw["zh"]
-        best_s, best_s_code = -1, "und"
-        for code, _p in script_pats:
-            if code == "ja":
-                hits = kana + han if kana > 0 else 0
-            elif code == "zh":
-                hits = 0 if kana > 0 else han
-            else:
-                hits = raw[code]
-            if hits > best_s:
-                best_s, best_s_code = hits, code
-        latin = len(latin_pat.findall(t))
-        if best_s > latin:
-            return best_s_code
-        low = t.lower()
-        best_v, best_v_code = 0, "und"
-        for code, p in vote_pats:
-            hits = len(p.findall(low))
-            if hits > best_v:
-                best_v, best_v_code = hits, code
-        if best_v > 0:
-            return best_v_code
-        return best_s_code if best_s > 0 else "und"
-
-    def one(t: str | None) -> str:
-        if not t:
-            return "und"
-        base = base_id(t)
-        rules = refine_sets.get(base)
-        if not rules:
-            return base
-        low = t.lower()
-        best, best_code = 0, base
-        for code, chars, word_pat in rules:
-            hits = sum(1 for ch in t if ch in chars)
-            if word_pat is not None:
-                hits += len(word_pat.findall(low))
-            if hits > best:
-                best, best_code = hits, code
-        return best_code
+    script default). One Arrow pass over the same stage-1/2 decision
+    as :func:`lang_id`, so non-refined verdicts are identical."""
 
     @F.pandas_udf("string")
     def _lid(texts: pd.Series) -> pd.Series:
-        return pd.Series([one(t) for t in texts])
+        return pd.Series([_lang_fine_id(t) if t else "und" for t in texts])
 
     return _lid(text)

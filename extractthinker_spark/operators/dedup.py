@@ -718,53 +718,8 @@ def _let(bound: Column, body) -> Column:
     reference it as a lambda variable inside ``body``. Without this,
     referencing a Column expression inside a higher-order lambda
     re-INLINES the whole expression at every lambda evaluation (no CSE
-    across lambda boundaries) — turning O(n) winnowing into O(n^2)."""
+    across lambda boundaries) — an O(n) fold becomes O(n^2)."""
     return F.transform(F.array(bound), body)[0]
-
-
-def rolling_hashes(text: Column, k: int = 8) -> Column:
-    """array<long> of polynomial k-gram hashes over the normalized
-    text: h_i = fold(chars[i..i+k-1], acc*31 + code) mod 2^31-1.
-    Pure Catalyst; every step stays far below long overflow. Identical
-    arithmetic is expressible in ANSI SQL, so fingerprints are
-    cross-engine verifiable. Spec note: for texts shorter than k the
-    single emitted hash treats missing chars as code 0 (Spark
-    ascii('') = 0; SQL twins must clamp ord('') = -1 up to 0)."""
-
-    def hashes_of(nm: Column) -> Column:
-        n = F.greatest(F.length(nm) - (k - 1), F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.aggregate(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, j: (
-                    acc * _WINNOW_BASE
-                    + F.ascii(F.substring(nm, (i + j).cast("int"), 1))
-                ) % _WINNOW_MOD,
-            ),
-        )
-
-    return _let(F.lower(normalize_ws_sql(text)), hashes_of)
-
-
-def winnow_fingerprints(text: Column, k: int = 8, window: int = 4) -> Column:
-    """Winnowed fingerprint set: the distinct minima of every
-    ``window`` consecutive k-gram hashes, sorted. Guarantees any shared
-    substring of length >= k + window - 1 contributes a shared
-    fingerprint (the winnowing coverage theorem) while keeping ~1/window
-    of the hashes — the document-fingerprinting dial for plagiarism /
-    near-dup detection at corpus scale."""
-
-    def mins_of(hs: Column) -> Column:
-        n_windows = F.greatest(F.size(hs) - (window - 1), F.lit(1))
-        mins = F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda i: F.array_min(F.slice(hs, i, window)),
-        )
-        return F.array_sort(F.array_distinct(mins))
-
-    return _let(rolling_hashes(text, k), mins_of)
 
 
 import re as _re
@@ -772,22 +727,29 @@ import re as _re
 import numpy as np
 import pandas as pd
 
-# Python twin of normalize_ws_sql (trim + \s+ -> ' '): re.ASCII keeps
-# \s == Java's default ASCII \s so the twin matches the JVM expression.
+# Python form of normalize_ws_sql (trim + \s+ -> ' '): re.ASCII keeps
+# \s == Java's default ASCII \s, as in the Spark expression.
 _WS_RE = _re.compile(r"\s+", _re.ASCII)
 
 
-def winnow_fingerprints_arrow(
+def winnow_fingerprints(
     text_col: Column, k: int = 8, window: int = 4
 ) -> Column:
-    """numpy twin of winnow_fingerprints — EXACTLY equal output (the
-    whole computation is integer arithmetic mod 2^31-1: Horner rolling
-    hash as a sliding-window dot product with precomputed powers, max
-    term ~3e16 << 2^63, then windowed min + sorted distinct). The
-    interpreted per-character lambda fold is the hot loop of the
-    Catalyst formulation; one Arrow batch replaces it with three numpy
-    ops per document. Use for production scans; the expression form
-    stays as the cross-engine parity spec."""
+    """Winnowed fingerprint set: the distinct minima of every
+    ``window`` consecutive k-gram hashes, sorted. Guarantees any shared
+    substring of length >= k + window - 1 contributes a shared
+    fingerprint (the winnowing coverage theorem) while keeping ~1/window
+    of the hashes — the document-fingerprinting dial for plagiarism /
+    near-dup detection at corpus scale.
+
+    Hashes are polynomial over the normalized text (whitespace runs →
+    one space, trimmed, lowercased): h_i = fold(chars[i..i+k-1],
+    acc*31 + code) mod 2^31-1, computed as a sliding-window dot product
+    with precomputed powers (max term ~3e16 << 2^63), then windowed min
+    + sorted distinct — all integer arithmetic, so the DuckDB twin is
+    bit-exact. Spec notes: ``\\s`` is the ASCII class; for texts
+    shorter than k the single emitted hash pads the missing chars with
+    code 0 (SQL twins must clamp ord('') = -1 up to 0)."""
     powers = np.array(
         [pow(_WINNOW_BASE, k - 1 - j, _WINNOW_MOD) for j in range(k)],
         dtype=np.int64,
@@ -829,7 +791,6 @@ def winnow_overlap_pairs(
     window: int = 4,
     min_shared: int = 10,
     max_doc_freq: int = 1000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs by shared winnowed fingerprints: posting-list
     bucket join on fingerprint (no O(n^2)), then per-pair shared count
@@ -841,17 +802,10 @@ def winnow_overlap_pairs(
     quadratic bucket. Dropping it lowers each affected pair's
     shared_fps by at most the number of hot fingerprints, a bounded,
     documented coverage loss (true heavy-overlap pairs share many
-    low-frequency fingerprints too).
-
-    ``impl='arrow'`` (default) computes fingerprints with the numpy
-    twin — integer-exact, so results are IDENTICAL to the Catalyst
-    form (pinned by test + the DuckDB oracle)."""
-    fingerprint_of = (
-        winnow_fingerprints_arrow if impl == "arrow" else winnow_fingerprints
-    )
+    low-frequency fingerprints too)."""
     fp = df.select(
         F.col(key).alias("_k"),
-        fingerprint_of(F.col(text_col), k, window).alias("fps"),
+        winnow_fingerprints(F.col(text_col), k, window).alias("fps"),
     )
     posting = cap_posting_df(
         fp.select("_k", F.explode("fps").alias("f")), "f", max_doc_freq
@@ -1247,7 +1201,7 @@ def substring_anchor_fps(
 ) -> Column:
     """array<struct<pos:long,f:long>> positional winnow anchors over
     the RAW text (exact-substring semantics — no normalization): the
-    polynomial k-gram hash (same arithmetic as rolling_hashes) at each
+    polynomial k-gram hash (same arithmetic as winnow_fingerprints) at each
     window minimum, with its 1-based character position; first-min
     tie-break; distinct (pos, f). numpy in one Arrow batch — all
     integer mod 2^31-1, so the DuckDB twin is bit-exact."""

@@ -92,9 +92,9 @@ def decode_eml_spans(b: bytes) -> list[tuple[str, str | None, str | None]]:
     value it sees is identical), and text content replays
     ``raw_data_manager.get_text_content`` line for line
     (payload CTE-decode + charset param + ``errors='replace'``).
-    ``decode_eml_spans_reference`` keeps the policy.default walk; a
-    differential test pins fast == reference over the fixture corpus
-    including defective mutations.
+    A differential test (tests/test_email.py) pins this fast path to
+    the policy.default walk over the fixture corpus including
+    defective mutations.
     """
     import email
     from email import policy
@@ -118,40 +118,6 @@ def decode_eml_spans(b: bytes) -> list[tuple[str, str | None, str | None]]:
                 payload = part.get_payload(decode=True)
                 charset = part.get_param("charset", "ASCII")
                 content = payload.decode(charset, errors="replace")
-            except Exception:
-                out.append(("media", None, f"attach:defective:{ctype}"))
-                continue
-            out.append(
-                ("html" if ctype == "text/html" else "text", content, None)
-            )
-        else:
-            out.append(("media", None, f"attach:{part.get_filename() or ctype}"))
-    return out
-
-
-def decode_eml_spans_reference(
-    b: bytes,
-) -> list[tuple[str, str | None, str | None]]:
-    """The original policy.default walk — kept as the differential
-    oracle for the compat32 fast path (tests/test_email.py pins
-    fast == reference over the fixture corpus + mutations)."""
-    import email
-    from email import policy
-
-    msg = email.message_from_bytes(b, policy=policy.default)
-    out: list[tuple[str, str | None, str | None]] = []
-    hdr = []
-    for h in ("Subject", "From", "To", "Date"):
-        v = msg.get(h)
-        if v:
-            hdr.append(f"{h}: {v}")
-    if hdr:
-        out.append(("text", "\n".join(hdr), None))
-    for part in _body_leaves(msg):
-        ctype = part.get_content_type()
-        if part.get_content_maintype() == "text":
-            try:
-                content = part.get_content()
             except Exception:
                 out.append(("media", None, f"attach:defective:{ctype}"))
                 continue

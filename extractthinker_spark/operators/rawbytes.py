@@ -492,25 +492,19 @@ _PDF_TEXT_OBJ_RE = re.compile(
     + rb"|(?<!" + _PDF_REGULAR + rb")(?:BT|ET)(?!" + _PDF_REGULAR + rb")"
 )
 _PDF_PAREN_RE = re.compile(rb"\\.|[()]", re.DOTALL)
-_PDF_STR = rb"\(((?:[^()\\]|\\.)*)\)"
 _PDF_HEX = rb"<([0-9A-Fa-f\s]*)>"
-# text-show operators in stream order: `(s) Tj`, `<hex> Tj`, or
-# `[ (a) -120 <hex> (b) ] TJ` (PDF 32000-1 §9.4.3; hex strings §7.3.4.3)
-_PDF_SHOW_RE = re.compile(
-    _PDF_STR + rb"\s*Tj"
-    + rb"|" + _PDF_HEX + rb"\s*Tj"
-    + rb"|\[(.*?)\]\s*TJ",
-    re.DOTALL,
-)
-# string elements inside a TJ array, literal or hex, in order
-_PDF_STR_RE = re.compile(_PDF_STR + rb"|" + _PDF_HEX)
-# full in-block token stream: show ops + the text-positioning ops that
-# decide LINE STRUCTURE (PDF 32000-1 §9.4.2): Td/TD (relative move),
-# T* (next line), Tm (absolute matrix), ' (move-then-show)
+# in-block token stream (PDF 32000-1 §9.4): the start of a literal
+# string (its end comes from _pdf_literal_end, the same rules the
+# text-object scan uses, so balanced parentheses stay inside it), a
+# hex string shown by Tj or ', the start of a TJ array, a comment,
+# and the text-positioning ops that decide LINE STRUCTURE (§9.4.2):
+# Td/TD (relative move), T* (next line), Tm (absolute matrix), plus
+# Tf font switches
 _PDF_TOK_RE = re.compile(
-    _PDF_STR + rb"\s*(Tj|')"
+    rb"(\()"
     + rb"|" + _PDF_HEX + rb"\s*(Tj|')"
-    + rb"|\[(.*?)\]\s*TJ"
+    + rb"|(\[)"
+    + rb"|%[^\r\n]*"
     + rb"|(-?[0-9.]+)[ \t\r\n]+(-?[0-9.]+)[ \t\r\n]+(Td|TD)\b"
     + rb"|(T\*)"
     + rb"|(?:-?[0-9.]+[ \t\r\n]+){4}(-?[0-9.]+)[ \t\r\n]+(-?[0-9.]+)"
@@ -518,6 +512,12 @@ _PDF_TOK_RE = re.compile(
     + rb"|/([A-Za-z0-9._+\-]+)[ \t\r\n]+-?[0-9.]+[ \t\r\n]+Tf\b",
     re.DOTALL,
 )
+# the show operator after a literal string: `(s) Tj` or `(s) '`
+_PDF_SHOW_OP_RE = re.compile(rb"\s*(Tj|')")
+# elements of a TJ array (`[ (a) -120 <hex> (b) ] TJ`, §9.4.3): a
+# literal string start, a hex string, or the closing bracket
+_PDF_ARRAY_ITEM_RE = re.compile(rb"\(|" + _PDF_HEX + rb"|\]")
+_PDF_TJ_RE = re.compile(rb"\s*TJ")
 # content-stream objects: << dict >> stream\n ... endstream
 _PDF_STREAM_RE = re.compile(
     rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.DOTALL
@@ -1114,39 +1114,54 @@ def _pdf_block_text(
         except ValueError:
             return None
 
-    for m in _PDF_TOK_RE.finditer(block):
-        if m.group(1) is not None or m.group(3) is not None:
-            op = m.group(2) if m.group(1) is not None else m.group(4)
-            if op == b"'":
+    pos = 0
+    while m := _PDF_TOK_RE.search(block, pos):
+        pos = m.end()
+        if m.group(1) is not None:  # (s) Tj / (s) '
+            pos = _pdf_literal_end(block, m.start())
+            if op := _PDF_SHOW_OP_RE.match(block, pos):
+                if op.group(1) == b"'":
+                    newline()
+                body = block[m.start() + 1 : pos - 1]
+                cur.append(_pdf_unescape(body, cur_enc, cur_cmap))
+                pos = op.end()
+        elif m.group(2) is not None:  # <hex> Tj / <hex> '
+            if m.group(3) == b"'":
                 newline()
-            cur.append(
-                _pdf_unescape(m.group(1), cur_enc, cur_cmap)
-                if m.group(1) is not None
-                else _pdf_hex_string(m.group(3), cur_cmap, cur_enc)
-            )
-        elif m.group(5) is not None:  # [ ... ] TJ
-            cur.append(
-                "".join(
-                    _pdf_unescape(sm.group(1), cur_enc, cur_cmap)
-                    if sm.group(1) is not None
-                    else _pdf_hex_string(sm.group(2), cur_cmap, cur_enc)
-                    for sm in _PDF_STR_RE.finditer(m.group(5))
-                )
-            )
-        elif m.group(8) is not None:  # tx ty Td/TD
-            ty = num(m.group(7))
+            cur.append(_pdf_hex_string(m.group(2), cur_cmap, cur_enc))
+        elif m.group(4) is not None:  # [ ... ] TJ
+            parts = []
+            while item := _PDF_ARRAY_ITEM_RE.search(block, pos):
+                pos = item.end()
+                if item.group() == b"]":
+                    break
+                if item.group(1) is not None:
+                    parts.append(
+                        _pdf_hex_string(item.group(1), cur_cmap, cur_enc)
+                    )
+                else:
+                    pos = _pdf_literal_end(block, item.start())
+                    body = block[item.start() + 1 : pos - 1]
+                    parts.append(_pdf_unescape(body, cur_enc, cur_cmap))
+            else:  # unclosed array: nothing after it is shown
+                break
+            if op := _PDF_TJ_RE.match(block, pos):
+                cur.append("".join(parts))
+                pos = op.end()
+        elif m.group(7) is not None:  # tx ty Td/TD
+            ty = num(m.group(6))
             if ty:  # non-zero vertical move = new line
                 newline()
-        elif m.group(9) is not None:  # T*
+        elif m.group(8) is not None:  # T*
             newline()
-        elif m.group(12) is not None:  # /Fname size Tf
-            fname = m.group(12).decode("latin-1")
+        elif m.group(11) is not None:  # /Fname size Tf
+            fname = m.group(11).decode("latin-1")
             if fonts and fname in fonts:
                 cur_cmap, cur_enc = fonts[fname]
             else:
                 cur_cmap, cur_enc = cmap, enc
-        else:  # a b c d e f Tm — break on y change
-            ty = num(m.group(11))
+        elif m.group(10) is not None:  # a b c d e f Tm — break on y change
+            ty = num(m.group(10))
             if last_ty is not None and ty is not None and ty != last_ty:
                 newline()
             last_ty = ty

@@ -1,14 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths (driver brief):
-  * brute-force cosine top-k — exact baseline. Queries are broadcast
-    (small side), corpus streams; dot product is a zip_with/aggregate
-    fold (JVM, no Python). One shuffle for the per-query top-k.
+Paths (driver brief):
+  * brute-force cosine top-k — exact baseline. Queries are collected
+    (small side), corpus streams through one numpy scoring pass. One
+    shuffle for the per-query top-k.
   * LSH-bucketed ANN — random-hyperplane signatures (deterministic,
-    seeded via xxhash64 of (plane, dim)), candidates share a bucket in
-    at least one of several hash tables, exact cosine re-rank within
-    candidates. The 100 TB path: corpus-side work is a narrow map +
-    bucket-key shuffle; no cross join ever materializes.
+    planes derived from md5 of (plane, dim)), candidates share a
+    bucket in at least one of several hash tables, exact cosine
+    re-rank within candidates. The 100 TB path: corpus-side work is a
+    narrow map + bucket-key shuffle; no cross join ever materializes.
+  * IVF ANN — KMeans (``ann_topk_ivf``) or portable Lloyd
+    (``ann_topk_ivf_portable``) cells, probe + exact re-rank.
+
+Every selection step (bucket signatures, cell assignment, probes) is
+one numpy pass per Arrow batch; the DuckDB oracle replays each with
+index-order folds, which agree with numpy's summation order on every
+decision because the decision margins (|projection| ~1e-6, distance
+gaps ~1e-5) dwarf the reordering noise (~1e-16).
 """
 
 from __future__ import annotations
@@ -178,29 +186,18 @@ def cosine_near_dups(
     higher recall; near-dup pairs at cos>=0.95 collide with high
     probability under random-hyperplane LSH).
     """
-    a = df.select(F.col(key).alias("a"), F.col(vec_col).alias("av"))
-    b = df.select(F.col(key).alias("b"), F.col(vec_col).alias("bv"))
     if exact:
+        a = df.select(F.col(key).alias("a"), F.col(vec_col).alias("av"))
+        b = df.select(F.col(key).alias("b"), F.col(vec_col).alias("bv"))
         cands = a.join(b, F.col("a") < F.col("b"))
     else:
         if dim is None:
             dim = _infer_dim(df, vec_col)
-
-        def bucketed(side: DataFrame, kname: str, vname: str) -> DataFrame:
-            return side.select(
-                kname, vname,
-                F.explode(F.array(*[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        lsh_bucket(F.col(vname), t, planes_per_table, dim).alias("bucket"),
-                    )
-                    for t in range(tables)
-                ])).alias("e"),
-            ).select(kname, vname, "e.table", "e.bucket")
-
+        lsh = (tables, planes_per_table, dim)
         cands = (
-            bucketed(a, "a", "av")
-            .join(bucketed(b, "b", "bv"), ["table", "bucket"])
+            _lsh_bucketed(df, key, vec_col, "a", "av", *lsh)
+            .join(_lsh_bucketed(df, key, vec_col, "b", "bv", *lsh),
+                  ["table", "bucket"])
             .filter(F.col("a") < F.col("b"))
             .select("a", "av", "b", "bv")
             .dropDuplicates(["a", "b"])
@@ -232,39 +229,17 @@ def _plane_constants(plane: int, dim: int) -> tuple[float, ...]:
     return tuple(out)
 
 
-def _hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
-    """Sign bit of <vec, h_plane>; the plane is a literal array, the
-    dot product a single left fold (order matches the SQL oracle)."""
-    consts = F.array(*[F.lit(c) for c in _plane_constants(plane, dim)])
-    proj = F.aggregate(
-        F.zip_with(vec, consts, lambda v, c: v * c),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-    return F.when(proj > 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_bucket(
-    vec: Column, table: int, planes_per_table: int = 8, dim: int = 64
-) -> Column:
-    """Bucket id for one hash table: the concatenated sign bits."""
-    bits = F.lit(0).cast("long")
-    for p in range(planes_per_table):
-        bits = bits * 2 + _hyperplane_sign(
-            vec, table * planes_per_table + p, dim
-        )
-    return bits
-
-
 def lsh_buckets_arrow(
     vec_col: Column, tables: int, planes_per_table: int, dim: int
 ) -> Column:
     """All hash-table buckets in one vectorized matmul (Arrow batch):
-    array<long> of length ``tables``. ~20x the expression fold (which
-    evaluates interpreted lambdas per (vector, plane, dim)); bit-equal
+    array<long> of length ``tables``; table t's bucket is the sign bits
+    of planes t*planes_per_table .. +planes_per_table-1, first plane
+    most significant. The SQL twin's index-order fold gives the same
     signs in practice — projections sit far above float64 reordering
     noise (min |proj| ~ 1e-6 on the test corpus vs ~1e-16 noise), and
-    the DuckDB oracle pins it empirically every round."""
+    the DuckDB oracle pins it empirically every round. NULL vectors
+    get NULL (no bucket)."""
     n_planes = tables * planes_per_table
     C = np.stack(
         [np.array(_plane_constants(p, dim)) for p in range(n_planes)]
@@ -290,54 +265,32 @@ def lsh_buckets_arrow(
     return _buckets(vec_col)
 
 
-def dist2(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a single left fold in index order
-    — the SAME summation order a SQL list_reduce twin uses, so both
-    engines execute the identical sequence of IEEE-double adds."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
+def _lsh_bucketed(
+    df: DataFrame,
+    key: str,
+    vec_col: str,
+    kname: str,
+    vname: str,
+    tables: int,
+    planes_per_table: int,
+    dim: int,
+) -> DataFrame:
+    """(kname, vname, table, bucket): one row per (vector, hash table)
+    — the bucket-key side of every LSH candidate join."""
+    bcol = lsh_buckets_arrow(F.col(vec_col), tables, planes_per_table, dim)
+    return df.select(
+        F.col(key).alias(kname),
+        F.col(vec_col).alias(vname),
+        F.posexplode(bcol).alias("table", "bucket"),
     )
-
-
-def _cent_literals(cents: list[list[float]]) -> Column:
-    """Centroids as a literal array<struct<d... , list_id>> — the
-    broadcast-dimension pattern (tiny, shipped in the plan)."""
-    return F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(x) for x in c]).alias("c"),
-                F.lit(i).alias("list_id"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
-
-
-def _assign_expr(vec: Column, cent_arr: Column) -> Column:
-    """Nearest-centroid id with a deterministic (d2, list_id) tie-break:
-    array_min over struct<d2,list_id> — a narrow map, no shuffle."""
-    return F.array_min(
-        F.transform(
-            cent_arr,
-            lambda s: F.struct(
-                dist2(vec, s["c"]).alias("d2"), s["list_id"].alias("list_id")
-            ),
-        )
-    )["list_id"]
 
 
 def _assign_arrow(vec_col: Column, cents: list[list[float]]) -> Column:
     """Nearest-centroid id via one numpy distance matrix per Arrow
-    batch — the scale path for assignment (the expression fold is an
-    interpreted per-(row, centroid, dim) lambda; measured the same ~20x
-    gap as the LSH signatures). numpy argmin takes the FIRST minimum,
-    i.e. the same (d2, list_id) tie-break as the expr path. Selection
-    only: output cos_sim values still come from the JVM fold over the
-    original vectors, so they stay bit-equal to the SQL oracle (the
-    LSH-signature precedent; distance reordering noise ~1e-15 vs
-    assignment gaps ~1e-5)."""
+    batch. numpy argmin takes the FIRST minimum, i.e. the (d2,
+    list_id) tie-break the SQL oracle orders by. Selection only:
+    distance reordering noise (~1e-15) sits far below assignment gaps
+    (~1e-5), the LSH-signature precedent."""
     C = np.asarray(cents, dtype=np.float64)
 
     @F.pandas_udf("int")
@@ -357,8 +310,7 @@ def _assign_arrow(vec_col: Column, cents: list[list[float]]) -> Column:
 
 def _probe_arrow(vec_col: Column, cents: list[list[float]], n_probe: int) -> Column:
     """The n_probe nearest centroid ids per query, (d2, list_id)-
-    ordered (stable argsort), as array<int> — numpy twin of the
-    slice(array_sort(...)) probe."""
+    ordered (stable argsort), as array<int>."""
     C = np.asarray(cents, dtype=np.float64)
 
     @F.pandas_udf("array<int>")
@@ -385,45 +337,23 @@ def _ivf_search(
     vec_col: str,
     k: int,
     n_probe: int,
-    impl: str = "expr",
 ) -> DataFrame:
     """Shared IVF search: per-query probe of the ``n_probe`` nearest
     cells ((d2, list_id)-ordered), join on list_id, exact-cosine
     re-rank. Search touches n_probe/n_lists of the corpus — the FAISS
-    recall/cost dial. ``impl='arrow'`` selects probes with numpy (scale
-    path); 'expr' is the pure-Catalyst cross-engine parity spec."""
-    if impl == "arrow":
-        q = queries.select(
-            F.col(key).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(
-                _probe_arrow(F.col(vec_col), cents, n_probe)
-            ).alias("list_id"),
-        )
-    else:
-        cent_arr = _cent_literals(cents)
-        dists = F.transform(
-            cent_arr,
-            lambda s: F.struct(
-                dist2(F.col(vec_col), s["c"]).alias("d2"),
-                s["list_id"].alias("list_id"),
-            ),
-        )
-        probes = F.slice(F.array_sort(dists), 1, n_probe)
-        q = queries.select(
-            F.col(key).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(probes).alias("p"),
-        ).select("query_id", "qv", F.col("p.list_id").alias("list_id"))
-
-    cos_fn = cosine_arrow if impl == "arrow" else cosine
+    recall/cost dial."""
+    q = queries.select(
+        F.col(key).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.explode(_probe_arrow(F.col(vec_col), cents, n_probe)).alias("list_id"),
+    )
     scored = (
         q.join(assigned, "list_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cos_fn(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -486,9 +416,7 @@ def ann_topk_ivf(
         F.col(vec_col).alias("cv"),
         _assign_arrow(F.col(vec_col), cents).alias("list_id"),
     )
-    return _ivf_search(
-        assigned, queries, cents, key, vec_col, k, n_probe, impl="arrow"
-    )
+    return _ivf_search(assigned, queries, cents, key, vec_col, k, n_probe)
 
 
 def portable_sample_pred(key_col: Column, pct: int) -> Column:
@@ -508,7 +436,6 @@ def lloyd_centroids_portable(
     n_lists: int,
     iters: int = 2,
     sample_pct: int | None = None,
-    impl: str = "expr",
     corpus_rows: int | None = None,
 ) -> list[list[float]]:
     """Deterministic, cross-engine-derivable IVF centroids.
@@ -527,12 +454,10 @@ def lloyd_centroids_portable(
     ~256×n_lists training rows (FAISS convention) — from the
     ``corpus_rows`` hint (table metadata) with NO job scheduled, or
     from a count job when no hint is given; pass an explicit
-    percentage when an oracle must replay the sampling. Per-round
-    driver traffic is n_lists×dim doubles (the collected means), never
-    vectors. The global row_number for init runs on the SAMPLE only —
-    a single-partition sort of a bounded set, not the corpus — and the
-    sample size it needs rides a count window on that same sort, so
-    init is ONE job, not a count plus a collect.
+    percentage when an oracle must replay the sampling. The bounded
+    sample is collected once (~256×n_lists vectors by construction);
+    init and every Lloyd round then run on the driver
+    (:func:`_lloyd_driver`), so training is a single job.
     """
     train = corpus.select(F.col(key).alias("_k"), F.col(vec_col).alias("v"))
     if sample_pct is None:
@@ -547,80 +472,17 @@ def lloyd_centroids_portable(
         sample_pct = min(100, max(1, -(-100 * target // max(1, n0))))
     if sample_pct < 100:
         train = train.filter(portable_sample_pred(F.col("_k"), sample_pct))
-    # Materialize the bounded training sample ONCE: the init job and
-    # every Lloyd round re-read ``train``, and the sampling predicate
-    # is not pushable, so without this each of the (iters+1) jobs
-    # re-scans the full corpus. The sample is ~256×n_lists vectors by
-    # construction — localCheckpoint cost is trivial and row values
-    # are unchanged (the oracle replays the same sample).
-    train = train.localCheckpoint()
-    if impl == "arrow":
-        # The whole Lloyd loop runs on the DRIVER over the collected
-        # bounded sample (same boundedness class as the centroid
-        # collects the expr path already does per round): one job
-        # instead of 1 init + 2·iters driver-blocking jobs. Numpy
-        # assignment is the same first-min argmin as _assign_arrow;
-        # per-cell means differ from the expr path only by float
-        # summation order (~1e-16), far below the ~1e-5 assignment-gap
-        # margin — the documented selection-only protocol pinned by
-        # the value-level oracle every round.
-        return _lloyd_driver(train, n_lists, iters)
-    # Init ranks {floor(i*n/k)+1} WITHOUT a separate count() action:
-    # rank r is an init rank iff ceil((r-1)*k/n) < ceil(r*k/n) (the
-    # interval [ (r-1)*k, r*k ) contains a multiple of n — identity
-    # fuzz-pinned in tests), with n supplied by a count window over
-    # the SAME single-partition sort row_number already requires. One
-    # job total for the init instead of two.
-    w = Window.orderBy("_k")
-    r, n = F.col("rnk"), F.col("_n")
-    k_ = F.lit(n_lists)
-    is_init = (
-        F.floor(((r - 1) * k_ + n - 1) / n) < F.floor((r * k_ + n - 1) / n)
-    )
-    init_rows = (
-        train.withColumn("rnk", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(Window.partitionBy()))
-        .filter(is_init)
-        .orderBy("rnk")
-        .select("v")
-        .collect()
-    )
-    if len(init_rows) < n_lists:
-        raise ValueError(
-            f"training set has {len(init_rows)} usable init rows "
-            f"< n_lists={n_lists}"
-        )
-    cents = [list(map(float, r["v"])) for r in init_rows]
-    for _ in range(iters):
-        if impl == "arrow":
-            assign = _assign_arrow(F.col("v"), cents)
-        else:
-            assign = _assign_expr(F.col("v"), _cent_literals(cents))
-        assigned = train.select("v", assign.alias("list_id"))
-        means = (
-            assigned.select("list_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("list_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_list: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_list.setdefault(r["list_id"], {})[r["pos"]] = r["m"]
-        cents = [
-            [by_list[i][p] for p in sorted(by_list[i])] if i in by_list else c
-            for i, c in enumerate(cents)
-        ]
-    return cents
+    return _lloyd_driver(train, n_lists, iters)
 
 
 def _lloyd_driver(
     train: DataFrame, n_lists: int, iters: int
 ) -> list[list[float]]:
-    """Driver-side twin of the portable Lloyd loop over the collected
-    (bounded, localCheckpoint'ed) sample: identical init-rank
-    selection (the ceil-interval identity on key-ranked rows),
-    first-min argmin assignment, per-cell means, empty cells keep
-    their previous centroid."""
+    """The portable Lloyd loop on the driver over the collected,
+    bounded ``(key, vector)`` training sample: init ranks
+    by the ceil-interval identity on key-ranked rows, first-min argmin
+    assignment (the (d2, list_id) tie-break), per-cell means, empty
+    cells keep their previous centroid."""
     pdf = train.toPandas()  # Arrow path — ~10x a row collect here
     pdf = pdf.sort_values(pdf.columns[0], kind="mergesort")
     n = len(pdf)
@@ -629,8 +491,8 @@ def _lloyd_driver(
             f"training set has {n} usable init rows < n_lists={n_lists}"
         )
     # rank r (1-based) is an init rank iff the interval [(r-1)k, rk)
-    # contains a multiple of n — the same identity the window path
-    # evaluates
+    # contains a multiple of n, i.e. r = floor(i*n/k) + 1 for some i
+    # (the SQL twin's init join)
     init_idx = [
         r - 1
         for r in range(1, n + 1)
@@ -660,31 +522,22 @@ def ann_topk_ivf_portable(
     n_probe: int = 4,
     iters: int = 2,
     sample_pct: int | None = None,
-    impl: str = "expr",
 ) -> DataFrame:
     """IVF ANN with portable deterministic centroids — identical search
     to ann_topk_ivf but trainable by any ANSI engine, so the whole
     operator (sampling, seeding, Lloyd, assignment, probe, re-rank)
-    gets a value-level DuckDB oracle. ``impl='arrow'`` switches the
-    assignment/probe SELECTION to numpy batches (~20x the interpreted
-    lambda fold) while cos_sim values stay on the JVM fold — the same
-    split the LSH path uses, pinned by the oracle every round."""
+    gets a value-level DuckDB oracle. Assignment and probe selection
+    are numpy batches; cos_sim is the index-order fold of
+    :func:`cosine_arrow`."""
     cents = lloyd_centroids_portable(
-        corpus, key, vec_col, n_lists, iters=iters, sample_pct=sample_pct,
-        impl=impl,
+        corpus, key, vec_col, n_lists, iters=iters, sample_pct=sample_pct
     )
-    if impl == "arrow":
-        assign = _assign_arrow(F.col(vec_col), cents)
-    else:
-        assign = _assign_expr(F.col(vec_col), _cent_literals(cents))
     assigned = corpus.select(
         F.col(key).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        assign.alias("list_id"),
+        _assign_arrow(F.col(vec_col), cents).alias("list_id"),
     )
-    return _ivf_search(
-        assigned, queries, cents, key, vec_col, k, n_probe, impl=impl
-    )
+    return _ivf_search(assigned, queries, cents, key, vec_col, k, n_probe)
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
@@ -703,48 +556,18 @@ def ann_topk_lsh(
     tables: int = 4,
     planes_per_table: int = 8,
     dim: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: candidates = bucket collisions in any table,
     exact cosine re-rank within candidates. Same output schema as
     brute_force_topk (recall < 1 by design). ``dim`` (embedding width)
     is inferred from one corpus row when not given — pass it explicitly
-    in production plans. ``impl='arrow'`` computes signatures with one
-    numpy matmul per Arrow batch (the scale path); ``'expr'`` is the
-    pure-Catalyst fold (the cross-engine parity spec)."""
+    in production plans. Signatures are one numpy matmul per Arrow
+    batch (:func:`lsh_buckets_arrow`)."""
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
-
-    def bucketed(df: DataFrame, kname: str, vname: str) -> DataFrame:
-        if impl == "arrow":
-            bcol = lsh_buckets_arrow(
-                F.col(vec_col), tables, planes_per_table, dim
-            )
-            return df.select(
-                F.col(key).alias(kname),
-                F.col(vec_col).alias(vname),
-                F.posexplode(bcol).alias("table", "bucket"),
-            )
-        return df.select(
-            F.col(key).alias(kname),
-            F.col(vec_col).alias(vname),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            lsh_bucket(
-                                F.col(vec_col), t, planes_per_table, dim
-                            ).alias("bucket"),
-                        )
-                        for t in range(tables)
-                    ]
-                )
-            ).alias("e"),
-        ).select(kname, vname, "e.table", "e.bucket")
-
-    qb = bucketed(queries, "query_id", "qv")
-    cb = bucketed(corpus, "neighbor_id", "cv")
+    lsh = (tables, planes_per_table, dim)
+    qb = _lsh_bucketed(queries, key, vec_col, "query_id", "qv", *lsh)
+    cb = _lsh_bucketed(corpus, key, vec_col, "neighbor_id", "cv", *lsh)
     cands = (
         qb.join(cb, ["table", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))

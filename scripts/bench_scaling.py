@@ -45,11 +45,8 @@ EXTRACT_ITERS = 4
 SPLIT_ITERS = 2
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def worker(cpus: int, docs: int) -> dict:
+    from bench import _force
     from extractthinker_spark.corpus import corpus_spark
     from extractthinker_spark.operators.extract import paginate_extract
     from extractthinker_spark.operators.split import (

@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from extractthinker_spark.operators.email_mime import (
     EML_HEADERS,
+    _body_leaves,
     decode_eml_spans,
     decode_mbox_messages,
     make_fixture_eml,
@@ -150,15 +151,44 @@ def test_eml_headers_tuple_is_lowercase_colon():
     assert all(h == h.lower() and h.endswith(":") for h in EML_HEADERS)
 
 
+def _decode_eml_spans_reference(
+    b: bytes,
+) -> list[tuple[str, str | None, str | None]]:
+    """The policy.default walk — the differential oracle for the
+    compat32 fast path in decode_eml_spans."""
+    import email
+    from email import policy
+
+    msg = email.message_from_bytes(b, policy=policy.default)
+    out: list[tuple[str, str | None, str | None]] = []
+    hdr = []
+    for h in ("Subject", "From", "To", "Date"):
+        v = msg.get(h)
+        if v:
+            hdr.append(f"{h}: {v}")
+    if hdr:
+        out.append(("text", "\n".join(hdr), None))
+    for part in _body_leaves(msg):
+        ctype = part.get_content_type()
+        if part.get_content_maintype() == "text":
+            try:
+                content = part.get_content()
+            except Exception:
+                out.append(("media", None, f"attach:defective:{ctype}"))
+                continue
+            out.append(
+                ("html" if ctype == "text/html" else "text", content, None)
+            )
+        else:
+            out.append(("media", None, f"attach:{part.get_filename() or ctype}"))
+    return out
+
+
 def test_eml_fast_path_matches_policy_default_reference():
     """The compat32 fast walk must reproduce the policy.default walk
     span-for-span over the fixture corpus, including defective
     mutations (broken charset, truncated base64, bogus content-type,
     bare non-MIME, forwarded rfc822)."""
-    from extractthinker_spark.operators.email_mime import (
-        decode_eml_spans_reference,
-    )
-
     cases: list[bytes] = []
     for i in range(40):
         cases.append(
@@ -189,4 +219,4 @@ def test_eml_fast_path_matches_policy_default_reference():
     for i in range(0, len(cases), 3):
         cases.append(cases[i][: max(20, len(cases[i]) // 2)])
     for raw in cases:
-        assert decode_eml_spans(raw) == decode_eml_spans_reference(raw), raw[:120]
+        assert decode_eml_spans(raw) == _decode_eml_spans_reference(raw), raw[:120]

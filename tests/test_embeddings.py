@@ -1,15 +1,11 @@
-"""Feature-hashed embeddings: arrow/catalyst parity, determinism, and
+"""Feature-hashed embeddings: DuckDB-twin parity, determinism, and
 the composed text → vector → near-dup road."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
-from extractthinker_spark.functions.embeddings import (
-    embed_documents,
-    hashed_embedding,
-)
+from extractthinker_spark.functions.embeddings import embed_documents
 
 FIX = [
     (0, "Hello world hello AGAIN hello"),
@@ -21,13 +17,24 @@ FIX = [
 
 
 def test_arrow_catalyst_parity_and_norm(spark):
+    """embed_documents equals its DuckDB twin (_hashed_emb_sql) bit for
+    bit: the accumulation is integer-valued, so the sqrt and the
+    divisions see the same doubles. The twin has no NULL-text row, so
+    NULL is pinned here as the zero vector."""
+    import duckdb
+
+    import __spark_entry__ as mod
+
     d = spark.createDataFrame(FIX, "doc_id long, text string")
     a = {r.doc_id: r.vec for r in embed_documents(d, dim=16).collect()}
-    c = {
-        r.doc_id: r.vec
-        for r in embed_documents(d, dim=16, impl="catalyst").collect()
-    }
-    assert a == c
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO docs VALUES (?, ?)", [r for r in FIX if r[1] is not None]
+    )
+    oracle = dict(con.execute(mod._hashed_emb_sql("docs", dim=16)).fetchall())
+    assert {k: v for k, v in a.items() if k != 2} == oracle
+    assert a[2] == [0.0] * 16
     # unit norm for token-bearing docs, zero vector otherwise
     for k, v in a.items():
         s = sum(x * x for x in v)
@@ -35,8 +42,6 @@ def test_arrow_catalyst_parity_and_norm(spark):
             assert s == 0.0
         else:
             assert abs(s - 1.0) < 1e-9
-    with pytest.raises(ValueError):
-        hashed_embedding(F.col("text"), impl="nope")
 
 
 def test_partition_invariance_and_seed(spark):

@@ -121,13 +121,15 @@ def test_winnowing_coverage_and_letbinding(spark):
 
 
 def test_winnow_arrow_equals_expr(spark):
-    """The numpy winnowing twin is integer arithmetic mod 2^31-1, so
-    its fingerprints must be IDENTICAL to the Catalyst fold on any
-    input (not merely within a float margin)."""
-    from extractthinker_spark.operators.dedup import (
-        winnow_fingerprints,
-        winnow_fingerprints_arrow,
-    )
+    """winnow_fingerprints is integer arithmetic mod 2^31-1, so its
+    fingerprints must be IDENTICAL to the DuckDB twin (_winnow_fps_sql,
+    the same CTEs the winnow_fingerprint_overlap oracle runs) on any
+    input — short-text padding, whitespace runs, case, non-ASCII —
+    not merely within a float margin."""
+    import duckdb
+
+    import __spark_entry__ as mod
+    from extractthinker_spark.operators.dedup import winnow_fingerprints
 
     texts = [
         "",
@@ -140,14 +142,20 @@ def test_winnow_arrow_equals_expr(spark):
         "repeat repeat repeat repeat repeat repeat",
         "unicode héllo wörld ünïcode",
     ]
-    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
-    both = df.select(
-        "i",
-        winnow_fingerprints(F.col("t")).alias("e"),
-        winnow_fingerprints_arrow(F.col("t")).alias("a"),
-    ).collect()
-    for r in both:
-        assert r["e"] == r["a"], (r["i"], texts[r["i"]], r["e"], r["a"])
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {
+        r["doc_id"]: r["f"]
+        for r in df.select(
+            "doc_id", winnow_fingerprints(F.col("text")).alias("f")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE src (doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO src VALUES (?, ?)", rows)
+    oracle = dict(con.execute(mod._winnow_fps_sql("src")).fetchall())
+    for i, t in rows:
+        assert got[i] == oracle[i], (i, t, got[i], oracle[i])
 
 
 def test_repetition_features_golden(spark):
@@ -189,11 +197,14 @@ def test_repetition_features_golden(spark):
 
 
 def test_repetition_arrow_catalyst_equal(spark):
-    """The zero-shuffle Arrow production path must be value-identical
-    to the Catalyst/oracle twin — same float protocol (integer sums →
-    one double division → HALF_UP round(4)), same trim semantics
-    (0x20 only), same tie-breaks — over paragraphs, empty text, ties,
-    unicode, and planted repetition."""
+    """repetition_features and gopher_filter must be value-identical
+    to their DuckDB twins (_repetition_core_sql, _gopher_sql) — same
+    float protocol (integer sums → one double division → HALF_UP
+    round(4)), same trim semantics (0x20 only), same tie-breaks — over
+    paragraphs, empty text, ties, unicode, and planted repetition."""
+    import duckdb
+
+    import __spark_entry__ as mod
     from extractthinker_spark.functions.textstats import (
         gopher_filter,
         repetition_features,
@@ -211,18 +222,27 @@ def test_repetition_arrow_catalyst_equal(spark):
         ("tie", "x y a b x y a b"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
 
-    def norm(d):
-        return sorted(tuple(r) for r in d.select(*sorted(d.columns)).collect())
+    def check(spark_df, sql):
+        res = con.execute(sql)
+        names = [d[0] for d in res.description]
+        oracle = [dict(zip(names, r)) for r in res.fetchall()]
+        cols = spark_df.columns
+        assert sorted(cols) == sorted(names)
+        got = sorted(tuple(r) for r in spark_df.select(*cols).collect())
+        want = sorted(tuple(r[c] for c in cols) for r in oracle)
+        assert got == want
 
-    ar = repetition_features(df, impl="arrow")
-    ca = repetition_features(df, impl="catalyst")
-    assert ar.columns == ca.columns
-    assert norm(ar) == norm(ca)
-    ga = gopher_filter(df, thresholds={"min_words": 3}, impl="arrow")
-    gc = gopher_filter(df, thresholds={"min_words": 3}, impl="catalyst")
-    assert ga.columns == gc.columns
-    assert norm(ga) == norm(gc)
+    check(
+        repetition_features(df),
+        mod._repetition_core_sql(
+            "t AS (SELECT doc_id, text AS txt FROM documents)"
+        ),
+    )
+    check(gopher_filter(df, thresholds={"min_words": 3}), mod._gopher_sql(3))
 
 
 def test_repetition_full_table_a1_metrics(spark):
@@ -476,9 +496,10 @@ def test_lang_id_web_scale(spark):
 
 
 def test_lang_id_matches_duckdb_twin(spark):
-    """The generated DuckDB SQL and the Spark expression agree on
-    mixed-script rows (the testdata documents are Latin-heavy, so the
-    script branch needs its own cross-engine pin)."""
+    """The generated DuckDB SQL and lang_id agree on mixed-script rows
+    (the testdata documents are Latin-heavy, so the script branch needs
+    its own cross-engine pin), including the kana rule, the Latin vote
+    and the zero-evidence fallbacks."""
     import duckdb
 
     import __spark_entry__ as mod
@@ -513,9 +534,12 @@ def test_lang_id_matches_duckdb_twin(spark):
 
 
 def test_lang_id_arrow_parity(spark):
-    """lang_id impl='arrow' is bit-equal to the Catalyst expression
-    twin on mixed-script and Latin-vote fixtures (incl. the kana rule
-    and zero-evidence fallbacks)."""
+    """lang_id's Arrow path is equal to the DuckDB twin (_langid_sql)
+    on mixed-script and Latin-vote fixtures (incl. the kana rule, the
+    Hangul branch and zero-evidence fallbacks)."""
+    import duckdb
+
+    import __spark_entry__ as mod
     from extractthinker_spark.functions.textstats import lang_id
 
     rows = [
@@ -535,16 +559,19 @@ def test_lang_id_arrow_parity(spark):
     arrow = {
         r["doc_id"]: r["l"]
         for r in df.select(
-            "doc_id", lang_id(F.col("text"), impl="arrow").alias("l")
+            "doc_id", lang_id(F.col("text")).alias("l")
         ).collect()
     }
-    expr = {
-        r["doc_id"]: r["l"]
-        for r in df.select(
-            "doc_id", lang_id(F.col("text"), impl="expr").alias("l")
-        ).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES {}) t(doc_id, text)"
+        .format(", ".join("(?, ?)" for _ in rows)),
+        [v for row in rows for v in row],
+    )
+    oracle = {
+        k: v for k, v in con.execute(mod._langid_sql()).fetchall()
     }
-    assert arrow == expr
+    assert arrow == oracle
 
 
 def test_c4_filter(spark):

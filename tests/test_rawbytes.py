@@ -674,6 +674,22 @@ def test_pdf_et_inside_string_does_not_end_text_object():
     assert decode_pdf_pages(raw) == ["a\nb"]
 
 
+def test_pdf_balanced_parens_in_literal_strings():
+    """Unescaped balanced parentheses belong to the literal string
+    (PDF 32000-1 §7.3.4.2): the show keeps its text at one and two
+    nesting levels and inside a TJ array; the escaped form decodes as
+    before."""
+    from extractthinker_spark.operators.rawbytes import _pdf_block_text
+
+    assert _pdf_block_text(b"(a (b) c) Tj") == "a (b) c"
+    assert _pdf_block_text(b"(a (b (c) d) e) Tj") == "a (b (c) d) e"
+    assert _pdf_block_text(b"[(x (y) z) -120 (w)] TJ") == "x (y) zw"
+    assert _pdf_block_text(b"(a \\(b\\) c) Tj") == "a (b) c"
+    # whole decoder: the text-object scan and the show lexer agree
+    raw = b"%PDF-1.4\nBT (f(x) = 1) Tj 0 -14 Td (ET) Tj ET\n%%EOF"
+    assert decode_pdf_pages(raw) == ["f(x) = 1\nET"]
+
+
 def test_pdf_tree_order_and_hex_strings():
     """Page-tree PDFs decode in TREE order even when content streams
     are scrambled in the file; hex-string show operators (<hex> Tj and

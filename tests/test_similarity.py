@@ -193,8 +193,8 @@ def test_lloyd_sample_pct_derived_from_n_lists(spark, monkeypatch):
     kept = df.filter(portable_sample_pred(F.col("vec_id"), pct)).count()
     assert kept < 1000
     # corpus_rows hint (VERDICT r3 'what's wrong' #2): identical
-    # centroids with ZERO count() actions — init's sample size rides a
-    # count window on the row_number sort instead of a second job
+    # centroids with ZERO count() actions — the driver-side Lloyd loop
+    # takes the sample size from the collected sample
     from pyspark.sql import DataFrame
 
     def _boom(self):
@@ -245,17 +245,31 @@ def test_ivf_portable_matches_search_properties(spark, vectors):
 
 
 def test_ivf_portable_arrow_equals_expr(spark, vectors):
-    """The numpy selection path must return exactly what the
-    pure-Catalyst parity spec returns (assignment gaps ~1e-5 dwarf
-    float reordering noise; cos values share the same JVM fold)."""
+    """ann_topk_ivf_portable returns exactly what its DuckDB twin
+    (_ivf_sql: md5 sample, key-rank init, Lloyd rounds, assignment,
+    probe, re-rank) returns on the fixture loaded as an ``embeddings``
+    table — assignment gaps ~1e-5 dwarf float reordering noise. The
+    twin queries vec_id < 20; 85 rows < 256*n_lists derive a 100%
+    training sample."""
+    import duckdb
+
+    import __spark_entry__ as mod
     from extractthinker_spark.operators.similarity import ann_topk_ivf_portable
 
-    queries = vectors.filter(F.col("vec_id") < 5)
-    a = sorted(map(tuple, ann_topk_ivf_portable(
-        vectors, queries, k=5, n_lists=4, n_probe=2, impl="expr").collect()))
-    b = sorted(map(tuple, ann_topk_ivf_portable(
-        vectors, queries, k=5, n_lists=4, n_probe=2, impl="arrow").collect()))
-    assert a == b
+    queries = vectors.filter(F.col("vec_id") < 20)
+    got = sorted(map(tuple, ann_topk_ivf_portable(
+        vectors, queries, k=5, n_lists=4, n_probe=2).collect()))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id INTEGER, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)",
+        [(r["vec_id"], list(r["embedding"])) for r in vectors.collect()],
+    )
+    sql = mod._ivf_sql(
+        n_lists=4, n_probe=2, iters=2, sample_pct=100, dim=16, k=5
+    )
+    want = sorted(con.execute(sql).fetchall())
+    assert got and got == want
 
 
 def test_quantized_ann_and_roundtrip(spark):
