@@ -55,7 +55,7 @@ from extractthinker_spark.eval.hallucination import hallucination_score
 from extractthinker_spark.eval.metrics import field_metrics
 from extractthinker_spark.operators.media import vertical_slices
 from extractthinker_spark.operators.similarity import (
-    ann_topk_ivf_portable,
+    ann_topk_ivf,
     ann_topk_lsh,
     brute_force_topk,
     cosine_near_dups,
@@ -524,15 +524,13 @@ def _q_ann_ivf(spark, sf):
     sampled training set (60%), key-rank-seeded Lloyd (2 rounds,
     (d2,list_id) tie-broken argmin, empty cells keep centroids), probe
     + exact-cosine re-rank — the WHOLE operator, training included, is
-    replayed by the DuckDB oracle (_ivf_sql). The KMeans production
-    path (ann_topk_ivf, seeded-sample fit) stays pinned by
-    tests/test_similarity.py subset-of-brute."""
+    replayed by the DuckDB oracle (_ivf_sql)."""
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
     q = e.filter(F.col("vec_id") < 20)
-    return ann_topk_ivf_portable(
+    return ann_topk_ivf(
         e, q, k=5, n_lists=16, n_probe=4, iters=2, sample_pct=60
     )
 
@@ -3362,7 +3360,7 @@ def _ivf_sql(
     dim: int = 64,
     k: int = 5,
 ) -> str:
-    """DuckDB twin of ann_topk_ivf_portable — replays the training too:
+    """DuckDB twin of ann_topk_ivf — replays the training too:
     portable md5 sample, key-rank init, ``iters`` Lloyd rounds, then
     assignment/probe/re-rank. d2 uses the same index-order fold as the
     Spark expression; means differ only by summation order (~1e-16,

@@ -29,6 +29,8 @@ batch by session.ARROW_MAX_RECORDS.
 
 from __future__ import annotations
 
+import functools
+import math
 import struct
 import zlib
 from collections.abc import Iterator
@@ -464,6 +466,13 @@ def media_signature(name: str, dim: int = N_FEATURES) -> list[float]:
     return out
 
 
+def _fold(terms: list) -> Column | float:
+    """``(0.0 + t0) + t1 + …``: the index-order add sequence of a left
+    fold from 0.0, over Columns (one codegen'd expression, no lambda)
+    or floats (on the driver) alike."""
+    return functools.reduce(lambda acc, t: acc + t, terms, 0.0)
+
+
 def classify_media(
     df: DataFrame,
     classes: list[tuple[str, list[float]]],
@@ -477,20 +486,25 @@ def classify_media(
     (extractor.py:536-607, :579-607): one comparison per class with a
     reference exemplar, winner = highest confidence, earlier class wins
     ties (the one-by-one ``>`` scan). The class list is a literal — the
-    broadcast-dimension pattern; scoring is a JVM fold over the feature
-    vector, no shuffle, no join.
+    broadcast-dimension pattern; each score is one fixed-width,
+    codegen'd cosine expression over the ``N_FEATURES`` feature slots
+    (the signature and its norm, folded on the driver in the same
+    index order, are literals), no shuffle, no join.
 
     Output: (key, media_class, media_conf 1..10, media_score). The
     confidence tiering maps cosine [-1,1] -> 1..10 like the reference's
     LLM confidence scale.
     """
-    from extractthinker_spark.operators.similarity import cosine
-
+    if any(len(sig) != N_FEATURES for _, sig in classes):
+        raise ValueError(f"class signatures must have {N_FEATURES} dims")
     feats = media_features(df, raw_col=raw_col, key=key)
+    f = [F.col("features")[d] for d in range(N_FEATURES)]
+    f_norm = F.sqrt(_fold([x * x for x in f]))
     entries = [
         F.struct(
-            cosine(
-                F.col("features"), F.array(*[F.lit(float(x)) for x in sig])
+            (
+                _fold([x * F.lit(float(s)) for x, s in zip(f, sig)])
+                / (f_norm * F.lit(math.sqrt(_fold([s * s for s in sig]))))
             ).alias("score"),
             F.lit(-idx).alias("negidx"),
             F.lit(name).alias("name"),

@@ -496,13 +496,13 @@ _PDF_HEX = rb"<([0-9A-Fa-f\s]*)>"
 # in-block token stream (PDF 32000-1 §9.4): the start of a literal
 # string (its end comes from _pdf_literal_end, the same rules the
 # text-object scan uses, so balanced parentheses stay inside it), a
-# hex string shown by Tj or ', the start of a TJ array, a comment,
+# hex string shown by Tj, ' or ", the start of a TJ array, a comment,
 # and the text-positioning ops that decide LINE STRUCTURE (§9.4.2):
 # Td/TD (relative move), T* (next line), Tm (absolute matrix), plus
 # Tf font switches
 _PDF_TOK_RE = re.compile(
     rb"(\()"
-    + rb"|" + _PDF_HEX + rb"\s*(Tj|')"
+    + rb"|" + _PDF_HEX + rb"\s*(Tj|['\"])"
     + rb"|(\[)"
     + rb"|%[^\r\n]*"
     + rb"|(-?[0-9.]+)[ \t\r\n]+(-?[0-9.]+)[ \t\r\n]+(Td|TD)\b"
@@ -512,8 +512,9 @@ _PDF_TOK_RE = re.compile(
     + rb"|/([A-Za-z0-9._+\-]+)[ \t\r\n]+-?[0-9.]+[ \t\r\n]+Tf\b",
     re.DOTALL,
 )
-# the show operator after a literal string: `(s) Tj` or `(s) '`
-_PDF_SHOW_OP_RE = re.compile(rb"\s*(Tj|')")
+# the show operator after a literal string: `(s) Tj`, `(s) '` or
+# `aw ac (s) "` (§9.4.3: ' and " move to the next line, then show)
+_PDF_SHOW_OP_RE = re.compile(rb"\s*(Tj|['\"])")
 # elements of a TJ array (`[ (a) -120 <hex> (b) ] TJ`, §9.4.3): a
 # literal string start, a hex string, or the closing bracket
 _PDF_ARRAY_ITEM_RE = re.compile(rb"\(|" + _PDF_HEX + rb"|\]")
@@ -573,14 +574,19 @@ def _pdf_text_objects(b: bytes) -> list[bytes]:
 
 def _pdf_unescape_bytes(s: bytes) -> bytes:
     """PDF literal-string escapes (PDF 32000-1 §7.3.4.2): named
-    escapes, ``\\(`` ``\\)`` ``\\\\`` and up-to-3-digit octal codes —
-    raw byte codes, before any font encoding is applied."""
+    escapes, ``\\(`` ``\\)`` ``\\\\``, up-to-3-digit octal codes, and a
+    backslash before an end-of-line (LF, CR or CR LF) — a line
+    continuation, so both vanish. Raw byte codes, before any font
+    encoding is applied."""
     out = bytearray()
     i, n = 0, len(s)
     while i < n:
         c = s[i]
         if c == 0x5C and i + 1 < n:  # backslash
             nxt = s[i + 1 : i + 2]
+            if nxt in (b"\n", b"\r"):  # line continuation
+                i += 3 if s[i + 1 : i + 3] == b"\r\n" else 2
+                continue
             if 0x30 <= s[i + 1] <= 0x37:  # octal digit
                 j = i + 1
                 while j < min(n, i + 4) and 0x30 <= s[j] <= 0x37:
@@ -1084,11 +1090,11 @@ def _pdf_block_text(
 ) -> str:
     """Shown text of one ``BT..ET`` block, POSITION-AWARE (pypdf's
     extract_text line logic, document_loader_pypdf.py:104-152): show
-    operators (``Tj``, ``'``, ``TJ`` arrays — literal and hex strings,
+    operators (``Tj``, ``'``, ``"``, ``TJ`` arrays — literal and hex strings,
     hex through the active font's cmap) concatenate onto the current
     line; a line break happens at ``T*``, at ``Td``/``TD`` with a
     non-zero vertical move, at a ``Tm`` whose y differs from the
-    previous ``Tm``, and before a ``'`` show. Real writers position
+    previous ``Tm``, and before a ``'`` or ``"`` show. Real writers position
     every fragment (often every glyph) with these operators — joining
     each show with a newline, the old convention, shredded
     glyph-per-show PDFs into one character per line.
@@ -1117,16 +1123,16 @@ def _pdf_block_text(
     pos = 0
     while m := _PDF_TOK_RE.search(block, pos):
         pos = m.end()
-        if m.group(1) is not None:  # (s) Tj / (s) '
+        if m.group(1) is not None:  # (s) Tj / (s) ' / (s) "
             pos = _pdf_literal_end(block, m.start())
             if op := _PDF_SHOW_OP_RE.match(block, pos):
-                if op.group(1) == b"'":
+                if op.group(1) != b"Tj":
                     newline()
                 body = block[m.start() + 1 : pos - 1]
                 cur.append(_pdf_unescape(body, cur_enc, cur_cmap))
                 pos = op.end()
-        elif m.group(2) is not None:  # <hex> Tj / <hex> '
-            if m.group(3) == b"'":
+        elif m.group(2) is not None:  # <hex> Tj / <hex> ' / <hex> "
+            if m.group(3) != b"Tj":
                 newline()
             cur.append(_pdf_hex_string(m.group(2), cur_cmap, cur_enc))
         elif m.group(4) is not None:  # [ ... ] TJ
@@ -1977,9 +1983,9 @@ def decode_pdf_pages(b: bytes) -> list[str]:
       * ``BT..ET`` blocks OUTSIDE streams are one page each (the
         uncompressed fixture-subset convention, kept for
         compatibility);
-      * text-show operators: ``(s) Tj``, ``<hex> Tj`` and ``[..] TJ``
-        arrays (literal + hex elements), with full literal-string
-        escape decoding;
+      * text-show operators: ``(s) Tj``, ``<hex> Tj``, their ``'``
+        and ``"`` next-line forms, and ``[..] TJ`` arrays (literal +
+        hex elements), with full literal-string escape decoding;
       * RC4-encrypted documents (standard security handler, empty
         user password — the common owner-protected shape) decrypt
         transparently first.

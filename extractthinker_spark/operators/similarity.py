@@ -9,8 +9,11 @@ Paths (driver brief):
     bucket in at least one of several hash tables, exact cosine
     re-rank within candidates. The 100 TB path: corpus-side work is a
     narrow map + bucket-key shuffle; no cross join ever materializes.
-  * IVF ANN — KMeans (``ann_topk_ivf``) or portable Lloyd
-    (``ann_topk_ivf_portable``) cells, probe + exact re-rank.
+  * IVF ANN — deterministic Lloyd cells (``ann_topk_ivf``) that the
+    DuckDB oracle replays, training included; probe + exact re-rank.
+
+Exact scores are :func:`cosine`; ranked outputs go through
+:func:`_per_query_topk`.
 
 Every selection step (bucket signatures, cell assignment, probes) is
 one numpy pass per Arrow batch; the DuckDB oracle replays each with
@@ -21,61 +24,84 @@ gaps ~1e-5) dwarf the reordering noise (~1e-16).
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
-    )
+def _stack(vs) -> np.ndarray:
+    """Rows of an Arrow vector batch as one float64 matrix (float32
+    input widens exactly)."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vs])
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity of two vector columns, one Arrow batch per call.
 
+    The dot product and both squared norms accumulate dimension by
+    dimension in float64 (``acc = acc + x_d*y_d`` in index order,
+    vectorized over the pair axis): the IEEE add sequence of the
+    DuckDB ``list_reduce`` twins, so scores are bit-identical, not
+    merely close (NOTES.md float protocol). ``array<float>`` input
+    widens to double BEFORE multiplying, as the twins'
+    ``embedding::DOUBLE[]`` casts do (a ``zip_with`` lambda over two
+    float arrays multiplies in float32). NULL when either vector is
+    NULL, the lengths differ, or a norm is zero.
 
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Bit-exact Arrow twin of :func:`cosine` for bulk pair scoring.
-
-    Accumulates the dot product and both squared norms dimension-by-
-    dimension (``acc = acc + x_d*y_d`` in index order, vectorized over
-    the pair axis) — the EXACT IEEE add sequence of the interpreted
-    zip_with/aggregate fold and of the DuckDB list_reduce twin, so the
-    scores are bit-identical, not merely close (NOTES.md float
-    protocol). Use for large candidate sets; ``cosine`` remains the
-    cross-engine parity spec."""
+    Declared nondeterministic only so that Catalyst keeps a filter on
+    the score above its projection; pushed below it, the filter gets
+    its own Python node and every surviving pair is scored twice."""
 
     @F.pandas_udf("double")
     def _cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        if len(av) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in av])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in bv])
-        n = A.shape[0]
-        d_acc = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for d in range(A.shape[1]):
-            ad = A[:, d]
-            bd = B[:, d]
-            d_acc = d_acc + ad * bd
-            na = na + ad * ad
-            nb = nb + bd * bd
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(d_acc / (np.sqrt(na) * np.sqrt(nb)))
+        out = np.full(len(av), np.nan)  # NaN leaves Arrow as NULL
+        by_dim: dict[int, list[int]] = {}
+        for i, (x, y) in enumerate(zip(av, bv)):
+            if x is not None and y is not None and len(x) == len(y):
+                by_dim.setdefault(len(x), []).append(i)
+        for rows in by_dim.values():
+            A = _stack(av.iloc[rows])
+            B = _stack(bv.iloc[rows])
+            d_acc = na = nb = np.zeros(len(rows))
+            for d in range(A.shape[1]):
+                ad, bd = A[:, d], B[:, d]
+                d_acc = d_acc + ad * bd
+                na = na + ad * ad
+                nb = nb + bd * bd
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out[rows] = d_acc / (np.sqrt(na) * np.sqrt(nb))
+        return pd.Series(out)
 
-    return _cos(a, b)
+    return _cos.asNondeterministic()(a, b)
+
+
+def _per_query_topk(
+    scored: DataFrame, k: int, score: str = "cos_sim", rank: str = "rank"
+) -> DataFrame:
+    """The ``k`` best rows per ``query_id``: ``rank`` is the 1-based
+    row_number by (``score`` desc, ``neighbor_id`` asc) — the tie-break
+    every DuckDB twin orders by. One shuffle on query_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score), F.asc("neighbor_id")
+    )
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _pairs_schema(
+    queries: DataFrame, corpus: DataFrame, key: str, score: str
+) -> str:
+    """DDL of scored (query_id, neighbor_id, ``score``) rows, the key
+    types taken from each side."""
+    return (
+        f"query_id {dict(queries.dtypes)[key]}, "
+        f"neighbor_id {dict(corpus.dtypes)[key]}, {score} double"
+    )
 
 
 def brute_force_topk(
@@ -96,24 +122,18 @@ def brute_force_topk(
     mapInPandas over the corpus (narrow, no pair materialization in
     the JVM): per Arrow batch, numpy accumulates the dot product and
     norms dimension-by-dimension — ``acc = acc + x_d*y_d`` in index
-    order, the EXACT left-fold IEEE sequence of the previous
-    zip_with/aggregate expressions (which Catalyst runs interpreted,
-    ~20x slower at 64 dims) and of the DuckDB list_reduce oracle, so
-    cos_sim is bit-identical. Only scalar scores leave Python; the
-    corpus vectors cross into Arrow once and no payload is shuffled —
-    the per-query top-k shuffles 3-scalar rows only.
+    order, the EXACT left-fold IEEE sequence of :func:`cosine` and of
+    the DuckDB list_reduce oracle, so cos_sim is bit-identical. Only
+    scalar scores leave Python; the corpus vectors cross into Arrow
+    once and no payload is shuffled — the per-query top-k shuffles
+    3-scalar rows only.
     """
     q_rows = queries.select(key, vec_col).collect()
+    out_schema = _pairs_schema(queries, corpus, key, "cos_sim")
     if not q_rows:
-        qid_type = dict(queries.dtypes)[key]
-        nid_type = dict(corpus.dtypes)[key]
-        return corpus.sparkSession.createDataFrame(
-            [],
-            f"query_id {qid_type}, neighbor_id {nid_type}, "
-            "cos_sim double, rank int",
-        )
+        return corpus.sparkSession.createDataFrame([], out_schema + ", rank int")
     qids = [r[0] for r in q_rows]
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    Q = _stack([r[1] for r in q_rows])
     dim = Q.shape[1]
     # query norms with the same left fold (scalar accumulation order
     # over dims is what matters; one value per query)
@@ -121,20 +141,13 @@ def brute_force_topk(
     for d in range(dim):
         qn = qn + Q[:, d] * Q[:, d]
     qn = np.sqrt(qn)
-    qid_type = dict(queries.dtypes)[key]
-    nid_type = dict(corpus.dtypes)[key]
-    out_schema = (
-        f"query_id {qid_type}, neighbor_id {nid_type}, cos_sim double"
-    )
 
     def score(batches):
         qids_arr = np.asarray(qids)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            C = _stack(pdf[vec_col])
             n = len(pdf)
             dots = np.zeros((n, len(qids)), dtype=np.float64)
             cn = np.zeros(n, dtype=np.float64)
@@ -158,12 +171,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _per_query_topk(scored, k)
 
 
 def cosine_near_dups(
@@ -210,10 +218,6 @@ def cosine_near_dups(
     )
 
 
-import functools
-import hashlib
-
-
 @functools.lru_cache(maxsize=4096)
 def _plane_constants(plane: int, dim: int) -> tuple[float, ...]:
     """Hyperplane components: pseudo-uniform in ~(-0.5, 0.5), derived
@@ -254,9 +258,8 @@ def lsh_buckets_arrow(
         out = []
         ok = vs.notna()
         if ok.any():
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vs[ok]])
-            S = (M @ C) > 0
-            B = S.reshape(len(M), tables, planes_per_table) @ weights
+            S = (_stack(vs[ok]) @ C) > 0
+            B = S.reshape(len(S), tables, planes_per_table) @ weights
             it = iter(B)
         for is_ok in ok:
             out.append([int(x) for x in next(it)] if is_ok else None)
@@ -285,41 +288,26 @@ def _lsh_bucketed(
     )
 
 
-def _assign_arrow(vec_col: Column, cents: list[list[float]]) -> Column:
-    """Nearest-centroid id via one numpy distance matrix per Arrow
-    batch. numpy argmin takes the FIRST minimum, i.e. the (d2,
-    list_id) tie-break the SQL oracle orders by. Selection only:
-    distance reordering noise (~1e-15) sits far below assignment gaps
-    (~1e-5), the LSH-signature precedent."""
-    C = np.asarray(cents, dtype=np.float64)
-
-    @F.pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        out = []
-        ok = vs.notna()
-        if ok.any():
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vs[ok]])
-            d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            it = iter(d2.argmin(axis=1))
-        return pd.Series(
-            [int(next(it)) if o else None for o in ok], dtype="Int32"
-        )
-
-    return _assign(vec_col)
+def _sq_dists(M: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Squared Euclidean distance of every row of ``M`` to every
+    centroid row of ``C`` (rows × centroids)."""
+    return ((M[:, None, :] - C[None, :, :]) ** 2).sum(-1)
 
 
 def _probe_arrow(vec_col: Column, cents: list[list[float]], n_probe: int) -> Column:
-    """The n_probe nearest centroid ids per query, (d2, list_id)-
-    ordered (stable argsort), as array<int>."""
+    """The n_probe nearest centroid ids per vector, (d2, list_id)-
+    ordered, as array<int>: one numpy distance matrix per Arrow batch.
+    The stable argsort keeps equal distances in list_id order, so
+    ``n_probe=1`` is the first-minimum argmin — cell assignment.
+    Selection only: distance reordering noise (~1e-15) sits far below
+    assignment gaps (~1e-5), the LSH-signature precedent."""
     C = np.asarray(cents, dtype=np.float64)
 
     @F.pandas_udf("array<int>")
     def _probe(vs: pd.Series) -> pd.Series:
-        out = []
         ok = vs.notna()
         if ok.any():
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vs[ok]])
-            d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+            d2 = _sq_dists(_stack(vs[ok]), C)
             idx = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
             it = iter(idx)
         return pd.Series(
@@ -327,96 +315,6 @@ def _probe_arrow(vec_col: Column, cents: list[list[float]], n_probe: int) -> Col
         )
 
     return _probe(vec_col)
-
-
-def _ivf_search(
-    assigned: DataFrame,
-    queries: DataFrame,
-    cents: list[list[float]],
-    key: str,
-    vec_col: str,
-    k: int,
-    n_probe: int,
-) -> DataFrame:
-    """Shared IVF search: per-query probe of the ``n_probe`` nearest
-    cells ((d2, list_id)-ordered), join on list_id, exact-cosine
-    re-rank. Search touches n_probe/n_lists of the corpus — the FAISS
-    recall/cost dial."""
-    q = queries.select(
-        F.col(key).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(_probe_arrow(F.col(vec_col), cents, n_probe)).alias("list_id"),
-    )
-    scored = (
-        q.join(assigned, "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_arrow(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def ann_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    key: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    train_rows: int | None = None,
-    corpus_rows: int | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) ANN, production path: seeded KMeans
-    partitions the corpus into ``n_lists`` cells; each query probes its
-    ``n_probe`` nearest centroids and exact-cosine re-ranks within
-    those cells only.
-
-    ``train_rows`` caps the KMeans fit at ~256×n_lists vectors (the
-    FAISS convention) — at 10^9 vectors a full-corpus fit is a
-    multi-pass job over every vector for no recall gain. Pass
-    ``corpus_rows`` (a row-count hint, e.g. from table metadata) to
-    draw the training set as a seeded Bernoulli sample; without it NO
-    pre-fit count job is scheduled — the fit trains on
-    ``limit(train_rows)``, an early-terminating scan (fine for
-    clustering quality unless the storage order is adversarial, in
-    which case supply the hint). Assignment of the full corpus is a
-    narrow map either way. Same output schema as brute_force_topk;
-    recall < 1 by design. For a value-level cross-engine-checkable
-    variant see ann_topk_ivf_portable.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    if train_rows is None:
-        train_rows = 256 * n_lists
-    if corpus_rows is not None and corpus_rows > train_rows:
-        # seeded Bernoulli sample, slightly over-drawn so the fit sees
-        # ~train_rows vectors (exact count is irrelevant to KMeans)
-        train = corpus.sample(
-            min(1.0, 1.1 * train_rows / corpus_rows), seed=seed
-        )
-    else:
-        train = corpus.limit(train_rows)
-    train_v = train.withColumn("_v", array_to_vector(F.col(vec_col)))
-    model = KMeans(
-        k=n_lists, seed=seed, featuresCol="_v", predictionCol="_list"
-    ).fit(train_v)
-
-    cents = [list(map(float, c)) for c in model.clusterCenters()]
-    assigned = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _assign_arrow(F.col(vec_col), cents).alias("list_id"),
-    )
-    return _ivf_search(assigned, queries, cents, key, vec_col, k, n_probe)
 
 
 def portable_sample_pred(key_col: Column, pct: int) -> Column:
@@ -465,9 +363,8 @@ def lloyd_centroids_portable(
         if corpus_rows is not None:
             n0 = corpus_rows
         else:
-            # documented fallback: a count job at plan-build. Pass
-            # corpus_rows (table metadata) to avoid it — the
-            # ann_topk_ivf pattern.
+            # documented fallback: a key-only count job at plan-build.
+            # Pass corpus_rows (table metadata) to avoid it.
             n0 = train.count()
         sample_pct = min(100, max(1, -(-100 * target // max(1, n0))))
     if sample_pct < 100:
@@ -498,13 +395,11 @@ def _lloyd_driver(
         for r in range(1, n + 1)
         if ((r - 1) * n_lists + n - 1) // n < (r * n_lists + n - 1) // n
     ]
-    M = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in pdf[pdf.columns[1]]]
-    )
+    M = _stack(pdf[pdf.columns[1]])
     cents = M[init_idx].copy()
     for _ in range(iters):
-        d2 = ((M[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d2.argmin(axis=1)  # first min == (d2, list_id) tie-break
+        # first min == the (d2, list_id) tie-break
+        assign = _sq_dists(M, cents).argmin(axis=1)
         for c in range(n_lists):
             members = M[assign == c]
             if len(members):
@@ -512,7 +407,7 @@ def _lloyd_driver(
     return [list(map(float, c)) for c in cents]
 
 
-def ann_topk_ivf_portable(
+def ann_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
     key: str = "vec_id",
@@ -522,22 +417,46 @@ def ann_topk_ivf_portable(
     n_probe: int = 4,
     iters: int = 2,
     sample_pct: int | None = None,
+    corpus_rows: int | None = None,
 ) -> DataFrame:
-    """IVF ANN with portable deterministic centroids — identical search
-    to ann_topk_ivf but trainable by any ANSI engine, so the whole
-    operator (sampling, seeding, Lloyd, assignment, probe, re-rank)
-    gets a value-level DuckDB oracle. Assignment and probe selection
-    are numpy batches; cos_sim is the index-order fold of
-    :func:`cosine_arrow`."""
+    """IVF (inverted-file) ANN: :func:`lloyd_centroids_portable` cuts
+    the corpus into ``n_lists`` cells; each query probes its
+    ``n_probe`` nearest cells ((d2, list_id)-ordered) and exact-cosine
+    re-ranks within them only. Search touches n_probe/n_lists of the
+    corpus — the FAISS recall/cost dial; recall < 1 by design. Same
+    output schema as brute_force_topk.
+
+    Training is deterministic and portable, so the whole operator
+    (sampling, init, Lloyd, assignment, probe, re-rank) has a
+    value-level DuckDB oracle. ``iters``, ``sample_pct`` and
+    ``corpus_rows`` pass through to the trainer: with neither
+    ``sample_pct`` nor the ``corpus_rows`` row-count hint, building the
+    plan runs one key-only ``count()``. Assignment of the full corpus
+    is a narrow map (:func:`_probe_arrow` with one probe)."""
     cents = lloyd_centroids_portable(
-        corpus, key, vec_col, n_lists, iters=iters, sample_pct=sample_pct
+        corpus, key, vec_col, n_lists,
+        iters=iters, sample_pct=sample_pct, corpus_rows=corpus_rows,
     )
     assigned = corpus.select(
         F.col(key).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        _assign_arrow(F.col(vec_col), cents).alias("list_id"),
+        _probe_arrow(F.col(vec_col), cents, 1)[0].alias("list_id"),
     )
-    return _ivf_search(assigned, queries, cents, key, vec_col, k, n_probe)
+    q = queries.select(
+        F.col(key).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.explode(_probe_arrow(F.col(vec_col), cents, n_probe)).alias("list_id"),
+    )
+    scored = (
+        q.join(assigned, "list_id")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+        )
+    )
+    return _per_query_topk(scored, k)
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
@@ -579,8 +498,7 @@ def ann_topk_lsh(
         "neighbor_id",
         F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _per_query_topk(scored, k)
 
 
 # --------------------------------------------------------------------------
@@ -641,8 +559,6 @@ def ann_topk_quantized(
     ordering is exact-over-shortlist, so recall vs full brute force
     is governed by ``shortlist``/``k`` (pinned by test), not by
     quantization noise."""
-    from pyspark.sql import Window
-
     qdf = quantize_embeddings(df, vec_col)
     qq = quantize_embeddings(
         queries.select(
@@ -657,29 +573,19 @@ def ann_topk_quantized(
     # All coarse math is integer (int8 codes → int64 dot / squared
     # norm), so numpy matmul is EXACT regardless of summation order
     # (max |term| 127²·dim ≪ 2^63); the one double division
-    # qdot/qnorm is the same two operands the expression fold divided,
-    # so qscore — and therefore shortlist membership and its
-    # (qscore, neighbor_id) tie-breaks — is bit-identical to the
-    # previous interpreted zip_with/aggregate folds and to the DuckDB
-    # oracle. The float vectors for the exact re-rank are re-attached
-    # to the tiny shortlist by key join instead of riding through the
-    # coarse scan.
+    # qdot/qnorm divides the same two operands as the DuckDB oracle's
+    # folds, so qscore — and therefore shortlist membership and its
+    # (qscore, neighbor_id) tie-breaks — is bit-identical to it. The
+    # float vectors for the exact re-rank are re-attached to the tiny
+    # shortlist by key join instead of riding through the coarse scan.
     q_rows = qq.select("query_id", "qvec").collect()
     if not q_rows:
-        qid_type = dict(queries.dtypes)[key]
-        nid_type = dict(df.dtypes)[key]
         return df.sparkSession.createDataFrame(
-            [],
-            f"query_id {qid_type}, neighbor_id {nid_type}, "
-            "cos_sim double, rnk int",
+            [], _pairs_schema(queries, df, key, "cos_sim") + ", rnk int"
         )
     qids = [r[0] for r in q_rows]
     Qi = np.stack([np.asarray(r[1], dtype=np.int64) for r in q_rows])
-    qid_type = dict(queries.dtypes)[key]
-    nid_type = dict(df.dtypes)[key]
-    coarse_schema = (
-        f"query_id {qid_type}, neighbor_id {nid_type}, qscore double"
-    )
+    coarse_schema = _pairs_schema(queries, df, key, "qscore")
 
     def coarse_score(batches):
         qids_arr = np.asarray(qids)
@@ -712,12 +618,7 @@ def ann_topk_quantized(
         .mapInPandas(coarse_score, schema=coarse_schema)
         .filter(F.col("query_id") != F.col("neighbor_id"))  # family rule
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id")
-    )
-    short = coarse.withColumn("_r", F.row_number().over(wq)).filter(
-        F.col("_r") <= shortlist
-    )
+    short = _per_query_topk(coarse, shortlist, score="qscore", rank="_r")
     # exact float re-rank over the shortlist only: attach the float
     # vectors back by key (shortlist ≪ corpus — AQE broadcasts it)
     short = short.join(
@@ -730,11 +631,6 @@ def ann_topk_quantized(
         "neighbor_id",
     )
     exact = short.withColumn("cos_sim", F.round(cosine(F.col("qv"), F.col("nv")), 6))
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(wf).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+    return _per_query_topk(exact, k, rank="rnk").select(
+        "query_id", "neighbor_id", "cos_sim", "rnk"
     )

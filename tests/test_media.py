@@ -219,6 +219,10 @@ def test_classify_media_argmax_and_tiebreak(spark):
            for r in classify_media(df, dup).collect()}
     assert set(out.values()) == {"First"}
 
+    # a signature must span every feature slot
+    with pytest.raises(ValueError):
+        classify_media(df, [("short", [1.0, 2.0])])
+
 
 def test_bmp_webp_dimensions():
     import struct as _s

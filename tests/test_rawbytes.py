@@ -690,6 +690,34 @@ def test_pdf_balanced_parens_in_literal_strings():
     assert decode_pdf_pages(raw) == ["f(x) = 1\nET"]
 
 
+def test_pdf_double_quote_show_operator():
+    """``aw ac string "`` (PDF 32000-1 §9.4.3) sets the word and
+    character spacing, moves to the next line and shows the string,
+    like ``'``: literal and hex forms both keep their text."""
+    from extractthinker_spark.operators.rawbytes import _pdf_block_text
+
+    assert _pdf_block_text(b'(a) Tj 0 0 (hi) "') == "a\nhi"
+    assert _pdf_block_text(b'(a) Tj 1.5 0.2 <6869> "') == "a\nhi"
+    assert _pdf_block_text(b"(a) Tj (hi) '") == "a\nhi"
+
+
+def test_pdf_backslash_eol_is_line_continuation():
+    """A backslash before LF, CR or CR LF inside a literal string
+    continues the line (PDF 32000-1 §7.3.4.2): backslash and EOL are
+    both dropped. The named ``\\n`` escape still decodes to LF."""
+    from extractthinker_spark.operators.rawbytes import (
+        _pdf_block_text,
+        _pdf_unescape_bytes,
+    )
+
+    assert _pdf_unescape_bytes(b"ab\\\ncd") == b"abcd"
+    assert _pdf_unescape_bytes(b"ab\\\rcd") == b"abcd"
+    assert _pdf_unescape_bytes(b"ab\\\r\ncd") == b"abcd"
+    assert _pdf_unescape_bytes(b"ab\\\n\ncd") == b"ab\ncd"
+    assert _pdf_unescape_bytes(b"ab\\ncd") == b"ab\ncd"
+    assert _pdf_block_text(b"(long \\\r\nline) Tj") == "long line"
+
+
 def test_pdf_tree_order_and_hex_strings():
     """Page-tree PDFs decode in TREE order even when content streams
     are scrambled in the file; hex-string show operators (<hex> Tj and

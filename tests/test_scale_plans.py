@@ -133,6 +133,48 @@ def test_classify_media_plan_single_python_stage_no_shuffle(spark):
     assert "Join" not in plan, plan
 
 
+def test_vector_scoring_plans_have_no_lambda_cosine(spark):
+    """Every exact cosine is the one Arrow kernel: the plans of the LSH
+    top-k, the LSH near-dup join and the int8 re-rank hold its
+    ArrowEvalPython node, once (a threshold filter on the score must
+    not clone it), and no zip_with/aggregate lambda fold over the
+    scored vectors (the int8 codec's own amax/transform lambdas are
+    not a cosine). classify_media scores with plain codegen'd
+    arithmetic: no lambda, no Arrow evaluation node."""
+    import re
+
+    from extractthinker_spark.operators.media import (
+        classify_media,
+        media_signature,
+    )
+    from extractthinker_spark.operators.similarity import (
+        ann_topk_lsh,
+        ann_topk_quantized,
+        cosine_near_dups,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0, 2.0]) for i in range(6)],
+        "vec_id int, embedding array<double>",
+    )
+    queries = vecs.filter(F.col("vec_id") < 2)
+    for df in (
+        ann_topk_lsh(vecs, queries, k=2, dim=3),
+        cosine_near_dups(vecs, dim=3),
+        ann_topk_quantized(vecs, queries, key="vec_id", vec_col="embedding"),
+    ):
+        plan = _plan(df, "simple")
+        assert plan.count("ArrowEvalPython [_cos(") == 1, plan
+        assert "zip_with" not in plan, plan
+        assert not re.search(r"aggregate\((av|bv|qv|cv|nv)#", plan), plan
+
+    media = spark.createDataFrame([("a", b"\x01\x02")], "doc_id string, raw binary")
+    classes = [(n, media_signature(n)) for n in ("X", "Y")]
+    plan = _plan(classify_media(media, classes))
+    assert "lambdafunction" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 def test_substring_dedup_plan_single_extend_stage(spark):
     """Plan regression for the round-5 fix: the extend-and-verify
     Arrow UDF must appear EXACTLY once — CollapseProject used to clone
