@@ -500,7 +500,7 @@ def _q_simhash_pairs(spark, sf):
 def _q_ann_brute(spark, sf):
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
     q = e.filter(F.col("vec_id") < 20)
     return brute_force_topk(e, q, k=5)
@@ -513,7 +513,7 @@ def _q_ann_lsh(spark, sf):
     pipeline: signatures -> bucket join -> cosine re-rank."""
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
     q = e.filter(F.col("vec_id") < 20)
     return ann_topk_lsh(e, q, k=5, dim=64)
@@ -527,7 +527,7 @@ def _q_ann_ivf(spark, sf):
     replayed by the DuckDB oracle (_ivf_sql)."""
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
     q = e.filter(F.col("vec_id") < 20)
     return ann_topk_ivf(
@@ -745,7 +745,7 @@ def _q_cosine_near_dups(spark, sf):
     oracle — and must be the only pairs found at threshold 0.9."""
     base = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     ).filter(F.col("vec_id") < 300)
     seeds = base.filter(F.col("vec_id") < 20)
     planted = seeds.select(
@@ -2358,7 +2358,7 @@ def _q_embedding_quantize(spark, sf):
 
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+        F.col("embedding").cast("array<double>").alias("vec"),
     )
     return quantize_embeddings(e, "vec").select(
         "vec_id", "qvec", "qvec_scale"
@@ -2375,7 +2375,7 @@ def _q_ann_quantized(spark, sf):
 
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+        F.col("embedding").cast("array<double>").alias("vec"),
     )
     q = e.filter(F.col("vec_id") < 20)
     return ann_topk_quantized(e, q, key="vec_id", vec_col="vec", k=5,

@@ -4,10 +4,12 @@ Five dedup modes, each scale-shaped (driver brief requirement):
 
   * exact         — fingerprint groupBy; one shuffle on the hash, never
                     on the text. Keeps the smallest key (deterministic).
-  * MinHash + LSH — char-shingle → n-permutation minhash signature
-                    (pure Catalyst: xxhash64 with per-permutation seed),
-                    banded LSH bucket join for candidates, exact shingle
-                    Jaccard verification on candidates only. No O(n²).
+  * MinHash + LSH — one Arrow pass per document: char-shingle →
+                    n-permutation minhash signature (xxhash64 with
+                    per-permutation constants) plus the exact shingle
+                    set as sorted integer codes; banded LSH buckets give
+                    id-only candidate pairs, verified by exact Jaccard
+                    on the codes. No O(n²).
   * SimHash       — 64-bit token-hash bit votes → hamming-close pairs
                     within LSH chunks of the simhash.
   * n-gram Jaccard— direct verified Jaccard over candidate pairs.
@@ -136,6 +138,64 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     windowing/distinct runs as one Arrow batch per task
     (see _shingle_udf)."""
     return _shingle_udf(k)(F.lower(normalize_ws_sql(text)))
+
+
+# the NULL text's one shingle; packed codes are never negative
+_NULL_CODE = -1
+
+
+@functools.cache
+def _shingle_codes_fn(k: int):
+    """Per-string shingle SET as exact integers: the same windows as
+    ``_shingles_of_fn`` (code points, n <= k → the whole text), each
+    packed injectively into an int64 and returned as sorted distinct
+    codes, so ``|A∩B|``, ``|A|`` and ``|B|`` equal those of the string
+    sets.
+
+    Packing: every code point becomes cp+1 in a ``63 // k``-bit field
+    (12 bits at k=5, so five fields take 60 bits), first char in the
+    highest field; 0 means "no char", which keeps a text of fewer than
+    k chars distinct from its zero-padded neighbours ('' packs to 0,
+    'ab' differs from 'ab\\x00'). A window holding a cp+1 that does not
+    fit its field (cp >= 4095 at k=5: CJK, astral) stays an exact
+    string in a sorted side list — the two kinds never meet, so the
+    counts add. NULL text (shingle [NULL]) gets ``_NULL_CODE``, so
+    NULL~NULL is 1.0 and NULL~'' is 0.0 as for the string arrays.
+
+    Returns ``codes_of(s) -> (int64 ndarray, list[str])``. Works on
+    k-strided column slices of the code-point array: O(n) memory
+    per document, no (n, k) window matrix."""
+    import numpy as np
+
+    bits = 63 // k
+    shifts = [bits * (k - 1 - j) for j in range(k)]
+    wide_at = 1 << bits
+    null_codes = np.array([_NULL_CODE], dtype=np.int64)
+
+    def codes_of(s):
+        if s is None:
+            return null_codes, []
+        cps = np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(
+            np.int64
+        ) + 1
+        if len(cps) < k:
+            cps = np.pad(cps, (0, k - len(cps)))
+        m = len(cps) - k + 1
+        packed = np.zeros(m, dtype=np.int64)
+        wide = np.zeros(m, dtype=bool)
+        for j in range(k):
+            col = cps[j:j + m]
+            packed |= col << shifts[j]
+            wide |= col >= wide_at
+        if not wide.any():
+            return np.unique(packed), []
+        strs = (
+            {s[i:i + k] for i in np.flatnonzero(wide).tolist()}
+            if len(s) > k else {s}
+        )
+        return np.unique(packed[~wide]), sorted(strs)
+
+    return codes_of
 
 
 _MERSENNE31 = (1 << 31) - 1
@@ -389,6 +449,66 @@ def _minhash_sig_batch_fn(num_perm: int, shingle_k: int):
     return sig_batch
 
 
+def _pass_udf(num_perm: int | None, shingle_k: int):
+    """The one Arrow pass of the near-dup road: normalized text in,
+    ``struct<sig, codes, wide>`` out — the minhash signature
+    (bit-identical to ``_minhash_sig_udf``) and the exact shingle set
+    (``_shingle_codes_fn``) from a single crossing into Python per
+    row. ``num_perm=None`` builds the verify-only form, whose ``sig``
+    is NULL. Built per call (per session), as ``_minhash_sig_udf``."""
+    import pandas as pd
+
+    codes_of = _shingle_codes_fn(shingle_k)
+    sig_batch = (
+        None if num_perm is None
+        else _minhash_sig_batch_fn(num_perm, shingle_k)
+    )
+
+    @F.pandas_udf(
+        "struct<sig: array<bigint>, codes: array<bigint>, wide: array<string>>"
+    )
+    def pass_udf(texts: pd.Series) -> pd.DataFrame:
+        cw = [codes_of(s) for s in texts]
+        return pd.DataFrame({
+            "sig": None if sig_batch is None else sig_batch(texts),
+            "codes": [c for c, _ in cw],
+            "wide": [w for _, w in cw],
+        })
+
+    return pass_udf.asNondeterministic()
+
+
+def _shingle_pass(
+    df: DataFrame,
+    key: str,
+    text_col: str,
+    num_perm: int | None,
+    shingle_k: int,
+) -> DataFrame:
+    """(_k, sig, codes, wide), one row per input row, materialized by a
+    lazy localCheckpoint so the LSH side and the verify side read one
+    computation."""
+    norm = F.lower(normalize_ws_sql(F.col(text_col)))
+    return (
+        df.select(
+            F.col(key).alias("_k"),
+            _pass_udf(num_perm, shingle_k)(norm).alias("_p"),
+        )
+        .select("_k", "_p.sig", "_p.codes", "_p.wide")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _merge_sigs(per_row: DataFrame, num_perm: int) -> DataFrame:
+    """(_k, sig) per row → one (_k, sig) per key: the element-wise min
+    (see minhash_signatures_df for the duplicate-key contract). The
+    ``num_perm`` mins are one SQL expression: built column by column,
+    the 64-wide aggregate costs more driver time to construct than
+    the whole aggregation takes to run on a small corpus."""
+    mins = ", ".join(f"min(sig[{i}])" for i in range(num_perm))
+    return per_row.groupBy("_k").agg(F.expr(f"array({mins})").alias("sig"))
+
+
 def minhash_signatures_df(
     df: DataFrame,
     key: str,
@@ -415,13 +535,53 @@ def minhash_signatures_df(
         F.col(key).alias("_k"),
         _minhash_sig_udf(num_perm, shingle_k)(norm).alias("sig"),
     )
-    aggs = [
-        F.min(F.element_at("sig", i + 1)).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    wide = per_row.groupBy("_k").agg(*aggs)
-    return wide.select(
-        "_k", F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
+    return _merge_sigs(per_row, num_perm)
+
+
+def _band_rows(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(_k, sig) → (_k, band, bh): the LSH bucket of every band, bh =
+    xxhash64 of the band's ``num_perm / bands`` signature values (one
+    SQL expression, as in ``_merge_sigs``)."""
+    rows_per_band = num_perm // bands
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(
+            f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)
+        )
+        + ") AS bh)"
+        for b in range(bands)
+    )
+    return sig.select(
+        "_k", F.expr(f"explode(array({structs}))").alias("e")
+    ).select("_k", "e.band", "e.bh")
+
+
+def _bucket_pairs(
+    banded: DataFrame, max_bucket_size: int | None
+) -> DataFrame:
+    """(_k, band, bh) → distinct candidate pairs (a < b), ids only.
+    Band buckets above ``max_bucket_size`` are dropped first (window
+    count over the bucket); each surviving bucket's keys are collected
+    on the window's own partitioning (no second exchange, at most
+    ``max_bucket_size`` keys per list) and expanded to its pairs, so
+    no self-join and no broadcast of the bucket table run."""
+    w = Window.partitionBy("band", "bh")
+    if max_bucket_size is not None:
+        banded = (
+            banded.withColumn("_df", F.count(F.lit(1)).over(w))
+            .filter(F.col("_df") <= max_bucket_size)
+            .drop("_df")
+        )
+    ks = (
+        banded.groupBy("band", "bh")
+        .agg(F.collect_list("_k").alias("ks"))
+        .filter(F.size("ks") > 1)
+    )
+    return (
+        ks.select(F.explode("ks").alias("a"), "ks")
+        .select("a", F.explode("ks").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
     )
 
 
@@ -438,7 +598,8 @@ def minhash_lsh_candidates(
 
     rows_per_band = num_perm / bands; a pair is a candidate if any band
     of the signature matches exactly. One shuffle on (band, band_hash);
-    the self-join happens within buckets only.
+    the self-join happens within buckets only. Pairs carry the two ids
+    and nothing else.
 
     ``max_bucket_size`` (default 1000, matching the posting-list cap
     ``cap_posting_df`` uses for the ngram/winnow paths; pass None to
@@ -452,27 +613,7 @@ def minhash_lsh_candidates(
     are capped too (i.e. the cluster really is huge).
     """
     banded = minhash_banded(df, key, text_col, num_perm, bands, shingle_k)
-    if max_bucket_size is not None:
-        w = Window.partitionBy("band", "bh")
-        banded = (
-            banded.withColumn("_df", F.count(F.lit(1)).over(w))
-            .filter(F.col("_df") <= max_bucket_size)
-            .drop("_df")
-        )
-    banded = banded.localCheckpoint(eager=False)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l._k") < F.col("r._k")),
-        )
-        .select(F.col("l._k").alias("a"), F.col("r._k").alias("b"))
-        .distinct()
-    )
-    return pairs
+    return _bucket_pairs(banded, max_bucket_size)
 
 
 def minhash_banded(
@@ -485,27 +626,19 @@ def minhash_banded(
 ) -> DataFrame:
     """(key, band, band_hash) rows — the LSH bucket assignment shared
     by the candidate join and the bucket-size audit."""
-    rows_per_band = num_perm // bands
     sig = minhash_signatures_df(df, key, text_col, num_perm, shingle_k)
-    return sig.select(
-        "_k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("_k", "e.band", "e.bh")
+    return _band_rows(sig, num_perm, bands)
+
+
+def _bucket_stats(
+    banded: DataFrame, max_bucket_size: int | None
+) -> DataFrame:
+    sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("size"))
+    capped = (
+        F.lit(False) if max_bucket_size is None
+        else F.col("size") > max_bucket_size
+    )
+    return sizes.select("band", "bh", "size", capped.alias("capped"))
 
 
 def minhash_bucket_stats(
@@ -523,16 +656,46 @@ def minhash_bucket_stats(
     of buckets the candidate join skipped — the cap must never be a
     SILENT recall loss (ADVICE r3): a curation run should record this
     next to its outputs (see dedup_minhash(return_stats=True))."""
-    sizes = (
-        minhash_banded(df, key, text_col, num_perm, bands, shingle_k)
-        .groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("size"))
+    return _bucket_stats(
+        minhash_banded(df, key, text_col, num_perm, bands, shingle_k),
+        max_bucket_size,
     )
-    capped = (
-        F.lit(False) if max_bucket_size is None
-        else F.col("size") > max_bucket_size
+
+
+def _verify_codes(
+    pairs: DataFrame, codes: DataFrame, threshold: float
+) -> DataFrame:
+    """(a, b) pairs + (_k, codes, wide) rows → (a, b, jaccard) with
+    jaccard >= threshold. Every row of a duplicated key joins, as the
+    string verify did.
+
+    The intersection runs in the JVM (``array_intersect`` over the
+    sorted distinct long codes, plus the usually empty wide-shingle
+    lists), so no pair's payload crosses into Python. ``|A∩B|`` is
+    let-bound (``_let``): it feeds numerator and denominator, and the
+    threshold filter is pushed into the join condition with the whole
+    expression substituted, so a plain projection would evaluate it
+    three times. The division sees the same integer operands
+    (|A∩B| and |A|+|B|-|A∩B|) as the string verify, so the double is
+    bit-identical."""
+    def side(c: str) -> DataFrame:
+        return codes.select(
+            F.col("_k").alias(c),
+            F.col("codes").alias(f"c_{c}"),
+            F.col("wide").alias(f"w_{c}"),
+        )
+
+    inter = F.size(F.array_intersect("c_a", "c_b")) + F.size(
+        F.array_intersect("w_a", "w_b")
     )
-    return sizes.select("band", "bh", "size", capped.alias("capped"))
+    sizes = F.size("c_a") + F.size("w_a") + F.size("c_b") + F.size("w_b")
+    jac = _let(inter, lambda i: i / (sizes - i))
+    return (
+        pairs.join(side("a"), "a")
+        .join(side("b"), "b")
+        .select("a", "b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def verify_jaccard(
@@ -544,34 +707,20 @@ def verify_jaccard(
     shingle_k: int = 5,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs; keeps pairs with
-    jaccard >= threshold. Joins shingle arrays to both sides — only
-    candidates pay this cost.
+    jaccard >= threshold. Only candidates pay the join.
 
-    |union| is derived as |A| + |B| - |intersect| (exact: the shingle
-    arrays are distinct by construction — char_shingles ends in
-    array_distinct), so the per-pair ``array_union`` materialization
-    (a fresh ~|A|+|B| string array per candidate pair, the larger of
-    the two set ops) is gone; the division sees the same integer
-    operands as before, so the jaccard double is bit-identical. The
-    intersect size is let-bound via the repo's 1-element
-    transform-struct trick (it feeds both numerator and denominator;
-    conditional/duplicated-subtree CSE is not guaranteed)."""
-    sh = df.select(
-        F.col(key).alias("_k"),
-        char_shingles(F.col(text_col), shingle_k).alias("sh"),
-    ).localCheckpoint(eager=False)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.transform(
-        F.array(F.struct(inter.alias("i"))),
-        lambda s: s["i"] / (F.size("sh_a") + F.size("sh_b") - s["i"]),
-    )[0]
-    out = (
-        pairs.join(sh.withColumnRenamed("_k", "a").withColumnRenamed("sh", "sh_a"), "a")
-        .join(sh.withColumnRenamed("_k", "b").withColumnRenamed("sh", "sh_b"), "b")
-        .select("a", "b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
+    Each row of ``df`` is shingled once, into sorted distinct int64
+    codes plus a (usually empty) list of shingles too wide to pack
+    (``_shingle_codes_fn``); the pairs join those per-row sets on
+    both ids and one Arrow pass intersects them. The codes are an
+    injective encoding of the char_shingles strings, not hashes, so
+    ``|A∩B|``, ``|A|`` and ``|B|`` are those of the string sets and
+    the jaccard double is bit-identical to the string-array verify
+    (pinned in tests/test_shingles.py, NULL and '' texts, wide code
+    points and duplicate keys included: a key with two rows verifies
+    each row, as before)."""
+    codes = _shingle_pass(df, key, text_col, None, shingle_k)
+    return _verify_codes(pairs, codes, threshold)
 
 
 def dedup_minhash(
@@ -584,7 +733,14 @@ def dedup_minhash(
     max_bucket_size: int | None = 1000,
     return_stats: bool = False,
 ):
-    """Full MinHash pipeline: LSH candidates → verified Jaccard pairs.
+    """Full MinHash pipeline: LSH candidates → verified Jaccard pairs,
+    the same rows as ``verify_jaccard(minhash_lsh_candidates(...))``
+    from one shingle pass: each row crosses into Python once and
+    leaves with its signature and its exact shingle codes
+    (``_pass_udf``), materialized by a lazy localCheckpoint that both
+    the bucket join (after the per-key min-merge) and the verify join
+    read. Candidates travel as (a, b) ids only.
+
     The band-bucket cap defaults ON (see minhash_lsh_candidates) —
     pass ``max_bucket_size=None`` for exhaustive pairs on corpora known
     to be exact-dedup'd first. The cap loses recall inside huge
@@ -592,16 +748,15 @@ def dedup_minhash(
     ``return_stats=True`` additionally returns the bucket audit
     DataFrame (minhash_bucket_stats) so runs can record how many
     buckets were skipped."""
-    cands = minhash_lsh_candidates(
-        df, key, text_col, num_perm, bands, max_bucket_size=max_bucket_size
+    shingle_k = 5
+    rows = _shingle_pass(df, key, text_col, num_perm, shingle_k)
+    banded = _band_rows(
+        _merge_sigs(rows.select("_k", "sig"), num_perm), num_perm, bands
     )
-    pairs = verify_jaccard(cands, df, key, text_col, threshold)
+    cands = _bucket_pairs(banded, max_bucket_size)
+    pairs = _verify_codes(cands, rows.select("_k", "codes", "wide"), threshold)
     if return_stats:
-        stats = minhash_bucket_stats(
-            df, key, text_col, num_perm, bands,
-            max_bucket_size=max_bucket_size,
-        )
-        return pairs, stats
+        return pairs, _bucket_stats(banded, max_bucket_size)
     return pairs
 
 
@@ -1016,13 +1171,16 @@ def dedup_lines_corpus(
 # Near-dup cluster resolution: connected components over candidate pairs
 # --------------------------------------------------------------------------
 
+_DRIVER_MAX_EDGES = 2_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
     max_iters: int = 15,
     strict: bool = False,
-    driver_max_edges: int | None = 2_000_000,
+    driver_max_edges: int | None = _DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """(node, comp) — connected components of the near-dup pair graph,
     comp = the smallest node id reachable from ``node``. The step
@@ -1033,44 +1191,46 @@ def connected_components(
     Two execution paths, same labels (comp = min reachable node — the
     iterative fixpoint and union-find both compute exactly this):
 
-    * **Bounded graphs** (directed edge count <= ``driver_max_edges``
-      after symmetrization, checked with one count on the persisted
-      edge table): union-find on the collected edges. Near-dup pair
-      graphs are sparse BY CONSTRUCTION (band-bucket caps / posting
-      df-caps upstream bound pair fan-out), so this is the common
-      case, and it replaces diameter-many sequential join rounds with
-      one collect — the same boundedness class as the Bloom-word and
-      IVF-centroid collects. 2M edges ≈ tens of MB on the driver.
-    * **Large graphs** (or ``driver_max_edges=None``): min-label
-      propagation — each round every node takes the min comp across
-      its neighborhood (one join + one map-side-combinable min per
-      round), stopping when a round changes nothing; rounds needed =
-      graph diameter. ``max_iters`` bounds adversarial chains; the
-      convergence check is a filter+count on the checkpointed
-      node-sized labels. Hitting ``max_iters`` without convergence is
-      never silent: a warning, or ``strict=True`` → RuntimeError.
-      Labels are localCheckpoint'ed each round — iterative plans
-      DOUBLE per round otherwise (the classic trap).
+    * **Bounded graphs** (at most ``driver_max_edges`` pair rows):
+      the pairs are collected once, as ``limit(driver_max_edges + 1)``
+      — one action, no union/distinct/persist/count chain — and
+      union-find runs on the driver (``_driver_components``); the
+      labels come back as a small local frame. Near-dup pair graphs
+      are sparse BY CONSTRUCTION (band-bucket caps / posting df-caps
+      upstream bound pair fan-out), so this is the common case, and it
+      replaces diameter-many sequential join rounds with one collect —
+      the same boundedness class as the Bloom-word and IVF-centroid
+      collects. 2M pairs ≈ tens of MB on the driver.
+    * **Large graphs** (the collect came back with more than
+      ``driver_max_edges`` rows, or ``driver_max_edges=None``):
+      min-label propagation over the symmetrized distinct edges — each
+      round every node takes the min comp across its neighborhood (one
+      join + one map-side-combinable min per round), stopping when a
+      round changes nothing; rounds needed = graph diameter.
+      ``max_iters`` bounds adversarial chains; the convergence check
+      is a filter+count on the checkpointed node-sized labels. Hitting
+      ``max_iters`` without convergence is never silent: a warning, or
+      ``strict=True`` → RuntimeError. Labels are localCheckpoint'ed
+      each round — iterative plans DOUBLE per round otherwise (the
+      classic trap).
     """
     edges = pairs.select(
         F.col(a_col).alias("u"), F.col(b_col).alias("v")
     )
-    edges = (
-        edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .distinct()
-        .persist()
+    edges = edges.union(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    if driver_max_edges is not None:
-        # one count on the persisted edges (the iterative path's first
-        # round would materialize them anyway)
-        n_edges = edges.count()
-        if n_edges <= driver_max_edges:
-            try:
-                return _components_driver(edges)
-            finally:
-                edges.unpersist()
+    label_schema = edges.select(
+        F.col("u").alias("node"), F.col("u").alias("comp")
+    ).schema
+    comp = _driver_components(pairs, a_col, b_col, driver_max_edges)
+    if comp is not None:
+        return _local_frame(
+            pairs.sparkSession,
+            {"node": list(comp), "comp": list(comp.values())},
+            label_schema,
+        )
+    edges = edges.distinct().persist()
     labels = (
         edges.select("u").distinct()
         .select(F.col("u").alias("node"), F.col("u").alias("comp"))
@@ -1122,11 +1282,27 @@ def connected_components(
     return labels
 
 
-def _components_driver(edges: DataFrame) -> DataFrame:
-    """Union-find over a collected (bounded) symmetric edge table;
-    labels = min node per component — exactly the iterative fixpoint.
-    Output schema matches the edge key type (node, comp)."""
-    rows = edges.collect()
+def _local_frame(spark, cols: dict, schema) -> DataFrame:
+    """A small driver-built frame, shipped as Arrow batches (from
+    pandas): a list of tuples would go through a Python RDD, whose
+    Python worker tasks cost more than the handful of rows."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(cols), schema=schema)
+
+
+def _driver_components(
+    pairs: DataFrame, a_col: str, b_col: str, bound: int | None
+) -> dict | None:
+    """{node: min node of its component} by union-find over the pairs
+    collected once with ``limit(bound + 1)``; None when ``bound`` is
+    None or the graph has more than ``bound`` pair rows (the caller's
+    distributed fallback)."""
+    if bound is None:
+        return None
+    rows = pairs.select(a_col, b_col).limit(bound + 1).collect()
+    if len(rows) > bound:
+        return None
     parent: dict = {}
 
     def find(x):
@@ -1137,25 +1313,17 @@ def _components_driver(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        u, v = r[0], r[1]
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
-            parent[ru] = rv
-    comp_min: dict = {}
-    for n in parent:
-        r = find(n)
-        if r not in comp_min or n < comp_min[r]:
-            comp_min[r] = n
-    labels = [(n, comp_min[find(n)]) for n in parent]
-    schema = edges.select(
-        F.col("u").alias("node"), F.col("u").alias("comp")
-    ).schema
-    return edges.sparkSession.createDataFrame(labels, schema=schema)
+            # the smaller root wins, so every root is its
+            # component's min node
+            if rv < ru:
+                ru, rv = rv, ru
+            parent[rv] = ru
+    return {n: find(n) for n in parent}
 
 
 def dedup_near_canonical(
@@ -1168,7 +1336,10 @@ def dedup_near_canonical(
     """Keep-list after near-dup clustering: every document mapped to
     its cluster's canonical (smallest-key) representative —
     (key, canonical, is_canonical). Documents in no pair are their own
-    canonical (left join; no rows lost)."""
+    canonical (left join; no rows lost). Components come from
+    ``connected_components``: on a bounded pair graph that is one
+    collect plus union-find on the driver, and the label frame it
+    returns is local, so the join back broadcasts it."""
     comps = connected_components(pairs, a_col, b_col)
     return df.select(F.col(key).alias(key)).join(
         comps.select(F.col("node").alias(key), "comp"), key, "left"
@@ -1178,6 +1349,37 @@ def dedup_near_canonical(
         (F.coalesce(F.col("comp"), F.col(key)) == F.col(key))
         .alias("is_canonical"),
     )
+
+
+def drop_near_duplicates(
+    df: DataFrame,
+    pairs: DataFrame,
+    key: str = "doc_id",
+    driver_max_edges: int | None = _DRIVER_MAX_EDGES,
+) -> DataFrame:
+    """``df`` without the non-canonical member of every near-dup
+    cluster: the rows ``dedup_near_canonical`` marks
+    ``is_canonical`` for the (a, b) ``pairs``, without the per-document
+    keep-list join.
+
+    On a bounded pair graph (see connected_components) the pairs are
+    collected once and resolved by union-find on the driver; the
+    non-canonical ids go back as a broadcast ``left_anti`` join, and
+    with none ``df`` is returned as is. Above ``driver_max_edges``
+    pair rows the distributed min-label propagation labels the nodes
+    and the anti-join reads its non-canonical rows."""
+    comp = _driver_components(pairs, "a", "b", driver_max_edges)
+    if comp is None:
+        labels = connected_components(pairs, driver_max_edges=None)
+        drop = labels.filter(F.col("node") != F.col("comp")).select(
+            F.col("node").alias(key)
+        )
+        return df.join(drop, key, "left_anti")
+    dropped = [n for n, c in comp.items() if n != c]
+    if not dropped:
+        return df
+    drop = _local_frame(df.sparkSession, {key: dropped}, df.select(key).schema)
+    return df.join(F.broadcast(drop), key, "left_anti")
 
 
 # --------------------------------------------------------------------------

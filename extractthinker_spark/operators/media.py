@@ -504,7 +504,10 @@ def classify_media(
         F.struct(
             (
                 _fold([x * F.lit(float(s)) for x, s in zip(f, sig)])
-                / (f_norm * F.lit(math.sqrt(_fold([s * s for s in sig]))))
+                / F.nullif(
+                    f_norm * F.lit(math.sqrt(_fold([s * s for s in sig]))),
+                    F.lit(0.0),
+                )
             ).alias("score"),
             F.lit(-idx).alias("negidx"),
             F.lit(name).alias("name"),
@@ -516,11 +519,14 @@ def classify_media(
         F.lit(1),
         F.least(F.lit(10), F.floor((best["score"] + 1.0) * 5.0).cast("int") + 1),
     )
+    # a zero feature vector (empty or NULL payload) has no direction:
+    # the row scores NULL rather than dividing by its zero norm
+    scored = f_norm > 0
     return feats.select(
         key,
-        best["name"].alias("media_class"),
-        conf.alias("media_conf"),
-        F.round(best["score"], 6).alias("media_score"),
+        F.when(scored, best["name"]).alias("media_class"),
+        F.when(scored, conf).alias("media_conf"),
+        F.when(scored, F.round(best["score"], 6)).alias("media_score"),
     )
 
 

@@ -21,10 +21,27 @@ Run:
 
 Outputs under --output:
   * ``data/``            — curated (doc_id, text) parquet;
-  * ``_audit/funnel.json`` — per-stage surviving-document counts (the
-    curation dashboard number everyone asks for first);
+  * ``_audit/funnel.json`` — ``funnel``: per-stage surviving-document
+    counts (the curation dashboard number everyone asks for first);
+    ``stage_wall_s``: wall seconds per stage, measured from the end of
+    the previous stage, so lazy steps (hygiene, PII) count in the
+    stage that materializes them;
   * ``_audit/host_stats/`` — per-host stats parquet when --url-input
     is given.
+
+Every counted stage ends in ONE eager localCheckpoint, and its row
+count is an ``Observation`` on that same pass (no ``count()`` job
+after it; the packed-sequence count rides on its parquet write the
+same way). Each stage labels its Spark jobs ``curate: <stage>`` with
+a job description only, so a job group set by the caller (a traced
+run) keeps owning them.
+
+Near-dup (stage 8, ``near_dedup``) shingles each document once: one
+Arrow pass yields its MinHash signature and its exact shingle set as
+sorted integer codes. Candidate pairs carry ids only, the Jaccard
+verify intersects the integer codes in the JVM, the verified pairs
+are collected once (bounded) and resolved by union-find on the
+driver, and the non-canonical ids leave by a broadcast anti-join.
 
 Every gate writes its verdict COUNTS, never silently drops (the
 repo-wide rule). Extraction dominates cost; for resumable extraction
@@ -40,6 +57,86 @@ import json
 import os
 import sys
 import time
+
+
+class _Funnel:
+    """The funnel's bookkeeping: surviving rows and wall seconds per
+    stage, and a job description per stage.
+
+    ``begin(stage)`` closes the previous stage's clock and labels the
+    jobs that follow ``curate: <stage>`` — a description only, so a
+    job group the caller set (a traced run's span) still owns them.
+    ``checkpoint`` materializes a stage with an eager localCheckpoint
+    and reads its row count from an ``Observation`` on that same
+    pass: no ``count()`` job after it."""
+
+    def __init__(self, spark) -> None:
+        self.sc = spark.sparkContext
+        self.rows: dict[str, int] = {}
+        self.wall_s: dict[str, float] = {}
+        self._desc = self.sc.getLocalProperty("spark.job.description")
+        self._stage: str | None = None
+        self._t = time.perf_counter()
+
+    def begin(self, stage: str) -> None:
+        self._close()
+        self._stage = stage
+        self.sc.setJobDescription(f"curate: {stage}")
+
+    def _close(self) -> None:
+        now = time.perf_counter()
+        if self._stage is not None:
+            self.wall_s[self._stage] = round(now - self._t, 3)
+        self._t = now
+
+    def end(self) -> None:
+        self._close()
+        self._stage = None
+        self.sc.setJobDescription(self._desc)
+
+    def done(self, stage: str, rows: int) -> None:
+        self.rows[stage] = rows
+
+    def checkpoint(self, df):
+        import pyspark.sql.functions as F
+        from pyspark.sql import Observation
+
+        obs = Observation(f"curate {self._stage}")
+        out = df.observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        ).localCheckpoint()
+        self.done(self._stage, obs.get["rows"])
+        return out
+
+    def write(self, df, path: str) -> None:
+        """Parquet write of ``df``; its row count is observed on the
+        write itself."""
+        import pyspark.sql.functions as F
+        from pyspark.sql import Observation
+
+        obs = Observation(f"curate {self._stage}")
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        self.done(self._stage, obs.get["rows"])
+
+
+def near_dedup(text, stages: _Funnel):
+    """Stage 8: drop every near-duplicate but its cluster's smallest
+    doc_id. One shingle pass per document feeds the LSH candidates
+    and the exact integer Jaccard verify (``dedup_minhash``); the
+    verified pairs are collected once and resolved by union-find on
+    the driver, and the non-canonical ids leave by a broadcast
+    anti-join inside the stage's eager checkpoint
+    (``drop_near_duplicates``)."""
+    from extractthinker_spark.operators.dedup import (
+        dedup_minhash,
+        drop_near_duplicates,
+    )
+
+    stages.begin("after_near_dedup")
+    pairs = dedup_minhash(text, "doc_id", "text")
+    return stages.checkpoint(drop_near_duplicates(text, pairs, key="doc_id"))
 
 
 def main(argv: list[str] | None = None, stop: bool = True) -> dict:
@@ -89,8 +186,6 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
     )
     from extractthinker_spark.operators.dedup import (
         dedup_lines_corpus,
-        dedup_minhash,
-        dedup_near_canonical,
         remove_substring_spans,
         substring_dup_spans,
     )
@@ -102,8 +197,10 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
 
     spark = get_spark("curate", master=args.master)
     t0 = time.time()
-    funnel: dict[str, int] = {}
+    stages = _Funnel(spark)
+    funnel = stages.rows
 
+    stages.begin("extracted")
     if args.input:
         docs = spark.read.parquet(args.input)
     else:
@@ -113,10 +210,11 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
 
     # 1. extraction (the dominant stage; see module docstring for the
     # bucketed-resume road at full scale)
-    text = doc_text(extract_main_content(docs, nest=True)).select(
-        "doc_id", F.col("content").alias("text")
-    ).localCheckpoint()
-    funnel["extracted"] = text.count()
+    text = stages.checkpoint(
+        doc_text(extract_main_content(docs, nest=True)).select(
+            "doc_id", F.col("content").alias("text")
+        )
+    )
 
     # 2. unicode hygiene
     clean = strip_control_chars(F.col("text"))
@@ -126,31 +224,28 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
 
     # 3. C4 gate
     if not args.no_c4:
+        stages.begin("after_c4")
         v = c4_filter(text)
-        text = (
+        text = stages.checkpoint(
             v.filter(F.col("keep"))
             .select("doc_id", F.col("text_clean").alias("text"))
-            .localCheckpoint()
         )
-        funnel["after_c4"] = text.count()
 
     # 4. Gopher gate
     if not args.no_gopher:
+        stages.begin("after_gopher")
         v = gopher_filter(text)
-        text = (
-            text.join(
-                v.filter(F.col("keep")).select("doc_id"), "doc_id"
-            ).localCheckpoint()
+        text = stages.checkpoint(
+            text.join(v.filter(F.col("keep")).select("doc_id"), "doc_id")
         )
-        funnel["after_gopher"] = text.count()
 
     # 5. language filter
     if args.languages:
+        stages.begin("after_language")
         keep = [c.strip() for c in args.languages.split(",") if c.strip()]
-        text = text.filter(
-            lang_id(F.col("text")).isin(keep)
-        ).localCheckpoint()
-        funnel["after_language"] = text.count()
+        text = stages.checkpoint(
+            text.filter(lang_id(F.col("text")).isin(keep))
+        )
 
     # 6. PII scrub (redact in place, keep every doc)
     text = pii_scrub_frame(text).select(
@@ -165,38 +260,34 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
 
     from extractthinker_spark.functions.textstats import fingerprint
 
+    stages.begin("after_exact_dedup")
     w_fp = Window.partitionBy(fingerprint(F.col("text"))).orderBy("doc_id")
-    text = (
+    text = stages.checkpoint(
         text.withColumn("_rn", F.row_number().over(w_fp))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .localCheckpoint()
     )
-    funnel["after_exact_dedup"] = text.count()
 
     # 8. near-dup canonical keep-list (MinHash + connected components)
-    pairs = dedup_minhash(text, "doc_id", "text")
-    canon = dedup_near_canonical(text, pairs, key="doc_id")
-    text = text.join(
-        canon.filter(F.col("is_canonical")).select("doc_id"), "doc_id"
-    ).localCheckpoint()
-    funnel["after_near_dedup"] = text.count()
+    text = near_dedup(text, stages)
 
     # 9. corpus-wide duplicate-line scrub (boilerplate)
-    text = dedup_lines_corpus(text).select(
+    stages.begin("after_line_dedup")
+    text = stages.checkpoint(dedup_lines_corpus(text).select(
         "doc_id", F.col("text_clean").alias("text")
-    ).localCheckpoint()
-    funnel["after_line_dedup"] = text.count()
+    ))
 
     # 10. exact-substring scrub (optional; heaviest dedup layer)
     if args.substring_dedup:
+        stages.begin("after_substring_dedup")
         spans = substring_dup_spans(
             text, min_len=args.substring_min_len
         )
-        text = remove_substring_spans(text, spans).select(
-            "doc_id", F.col("text_clean").alias("text")
-        ).localCheckpoint()
-        funnel["after_substring_dedup"] = text.count()
+        text = stages.checkpoint(
+            remove_substring_spans(text, spans).select(
+                "doc_id", F.col("text_clean").alias("text")
+            )
+        )
 
     # 11. benchmark decontamination (late, over the final text — the
     # eval set must not survive any upstream rewrite)
@@ -205,6 +296,7 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
             contamination_hits,
         )
 
+        stages.begin("after_decontam")
         bench = spark.read.parquet(args.decontam_input)
         # The corpus-wide n-gram explode + broadcast join is the most
         # expensive stage in the funnel — materialize it ONCE and
@@ -216,10 +308,9 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
             text, bench, n=args.decontam_ngram
         ).write.mode("overwrite").parquet(audit_path)
         hits = spark.read.parquet(audit_path)
-        text = text.join(
-            hits.select("doc_id"), "doc_id", "left_anti"
-        ).localCheckpoint()
-        funnel["after_decontam"] = text.count()
+        text = stages.checkpoint(
+            text.join(hits.select("doc_id"), "doc_id", "left_anti")
+        )
 
     # 12. per-host cap + host stats
     if args.url_input:
@@ -228,12 +319,12 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
             host_stats,
         )
 
+        stages.begin("after_host_cap")
         urls = spark.read.parquet(args.url_input)
         capped = cap_per_host(
             urls, args.max_per_host
         ).select("doc_id")
-        text = text.join(capped, "doc_id").localCheckpoint()
-        funnel["after_host_cap"] = text.count()
+        text = stages.checkpoint(text.join(capped, "doc_id"))
         host_stats(
             urls.join(text, "doc_id")
         ).write.mode("overwrite").parquet(
@@ -249,25 +340,23 @@ def main(argv: list[str] | None = None, stop: bool = True) -> dict:
             pack_sequences,
         )
 
+        stages.begin("packed_sequences")
         packer = pack_chop if args.pack_mode == "chop" else pack_sequences
         seqs = packer(
             text, budget=args.pack_budget, n_groups=args.pack_groups
         )
-        seqs.write.mode("overwrite").parquet(
-            os.path.join(args.output, "sequences")
-        )
-        funnel["packed_sequences"] = spark.read.parquet(
-            os.path.join(args.output, "sequences")
-        ).count()
+        stages.write(seqs, os.path.join(args.output, "sequences"))
 
+    stages.begin("written")
+    written = funnel[[k for k in funnel if not k.startswith("packed")][-1]]
     text.write.mode("overwrite").parquet(
         os.path.join(args.output, "data")
     )
-    funnel["written"] = funnel[
-        [k for k in funnel if not k.startswith("packed")][-1]
-    ]
+    stages.done("written", written)
+    stages.end()
     report = {
         "funnel": funnel,
+        "stage_wall_s": stages.wall_s,
         "wall_seconds": round(time.time() - t0, 2),
         "stages": [k for k in funnel],
     }

@@ -369,3 +369,82 @@ def test_connected_components_driver_path_matches_iterative(spark):
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, slow.collect())
     )
+
+
+def _planted_near_dups(spark):
+    """30 unrelated docs plus three planted clusters: each member one
+    or two words off its cluster's first doc."""
+    import random
+
+    random.seed(5)
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
+             "golf", "hotel", "india", "juliet", "kilo", "lima", "mike",
+             "november", "oscar", "papa", "quebec", "romeo", "sierra"]
+    rows = []
+    for i in range(30):
+        rows.append((f"u{i:02d}", " ".join(random.choice(words) for _ in range(40))))
+    for c in range(3):
+        base = [random.choice(words) for _ in range(60)]
+        for m in range(3):
+            doc = list(base)
+            doc[10 * m] = f"edit{m}"
+            rows.append((f"c{c}m{m}", " ".join(doc)))
+    return spark.createDataFrame(rows, "doc_id string, text string").localCheckpoint()
+
+
+def test_curate_near_dup_job_budget(spark):
+    """curate's near-dup stage (shingle pass + LSH candidates + verify,
+    one collect of the verified pairs, the keep-list anti-join inside
+    the stage's checkpoint) runs a fixed handful of Spark jobs, counted
+    under a job group this test sets: the stage must keep the caller's
+    group. On this fixture they are the pass + min-merge map stage, the
+    verify side's broadcast of the codes, the bucket window, the
+    bucket-list stage, the pair distinct, the collect, the keep-list
+    broadcast and the checkpoint; the string-verify shape with
+    distributed-style components ran 13 plus 2 for the funnel count."""
+    from jobs.curate_job import _Funnel, near_dedup
+
+    text = _planted_near_dups(spark)
+    sc = spark.sparkContext
+    group = "test-near-dup-budget"
+    sc.setJobGroup(group, group)
+    try:
+        stages = _Funnel(spark)
+        out = near_dedup(text, stages)
+        stages.end()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    kept = {r["doc_id"] for r in out.collect()}
+    assert stages.rows["after_near_dedup"] == len(kept) == 30 + 3
+    assert {f"c{c}m0" for c in range(3)} <= kept
+    assert not any(d.startswith("c") and not d.endswith("m0") for d in kept)
+    assert len(jobs) <= 8, len(jobs)
+
+
+def test_near_dup_components_fallback_same_labels(spark):
+    """A ``driver_max_edges`` bound smaller than the verified pair
+    count trips the driver path: the distributed min-label propagation
+    runs instead and gives the same labels, the same keep-list and the
+    same survivors."""
+    from extractthinker_spark.operators.dedup import (
+        connected_components,
+        dedup_minhash,
+        drop_near_duplicates,
+    )
+
+    text = _planted_near_dups(spark)
+    pairs = dedup_minhash(text, "doc_id", "text").localCheckpoint()
+    assert pairs.count() >= 2
+    driver = sorted(map(tuple, connected_components(pairs).collect()))
+    spread = connected_components(pairs, driver_max_edges=1)
+    # the fallback's labels are checkpointed frames, not a local relation
+    assert "LocalTableScan" not in spread._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, spread.collect())) == driver
+    kept = sorted(r["doc_id"] for r in drop_near_duplicates(text, pairs).collect())
+    kept_fallback = sorted(
+        r["doc_id"]
+        for r in drop_near_duplicates(text, pairs, driver_max_edges=1).collect()
+    )
+    assert kept == kept_fallback
+    assert len(kept) == 33

@@ -224,6 +224,38 @@ def test_classify_media_argmax_and_tiebreak(spark):
         classify_media(df, [("short", [1.0, 2.0])])
 
 
+def test_classify_media_zero_feature_vector_scores_null(spark):
+    """An empty or too-short payload has an all-zero feature vector.
+    Its cosine has no denominator, so the row scores NULL (class,
+    confidence and score) instead of failing the job with ANSI mode's
+    DIVIDE_BY_ZERO; the other rows score as usual."""
+    from extractthinker_spark.operators.media import (
+        classify_media,
+        media_features,
+        media_signature,
+    )
+
+    rows = [("a", b""), ("b", b"\x01\x02\x03"), ("c", _png(16, 16))]
+    df = spark.createDataFrame(rows, "doc_id string, raw binary")
+    zero = {
+        r["doc_id"]: not any(r["features"])
+        for r in media_features(df).collect()
+    }
+    classes = [(n, media_signature(n)) for n in ("A", "B")]
+    got = {r["doc_id"]: r for r in classify_media(df, classes).collect()}
+    assert zero["a"] and not zero["c"]
+    for doc_id, is_zero in zero.items():
+        r = got[doc_id]
+        if is_zero:
+            assert (r["media_class"], r["media_conf"], r["media_score"]) == (
+                None, None, None
+            ), doc_id
+        else:
+            assert r["media_class"] in {"A", "B"}
+            assert 1 <= r["media_conf"] <= 10
+            assert r["media_score"] is not None
+
+
 def test_bmp_webp_dimensions():
     import struct as _s
 

@@ -227,3 +227,107 @@ def test_dedup_minhash_survives_session_restart():
     first, second = json.loads(proc.stdout.strip().splitlines()[-1])
     assert first and first == second
     assert "Failed to update accumulator" not in proc.stderr
+
+
+def _verify_jaccard_strings(pairs, df, key, text_col, threshold=0.8, k=5):
+    """The string-array verify the integer-code verify replaced, kept
+    as the reference: char_shingles arrays joined to both sides,
+    |A∩B| let-bound through a one-element transform, |A∪B| derived as
+    |A| + |B| - |A∩B|."""
+    sh = df.select(
+        F.col(key).alias("_k"), char_shingles(F.col(text_col), k).alias("sh")
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = F.transform(
+        F.array(F.struct(inter.alias("i"))),
+        lambda s: s["i"] / (F.size("sh_a") + F.size("sh_b") - s["i"]),
+    )[0]
+    return (
+        pairs.join(sh.withColumnRenamed("_k", "a").withColumnRenamed("sh", "sh_a"), "a")
+        .join(sh.withColumnRenamed("_k", "b").withColumnRenamed("sh", "sh_b"), "b")
+        .select("a", "b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+EXACT_TEXTS = [
+    (1, None),
+    (2, None),
+    (3, ""),
+    (4, "a"),
+    (5, "abcd"),
+    (6, "abcde"),
+    (7, "ABCDE"),                                   # == 6 after lowercasing
+    (8, "ab\x00cd"),                                # NUL is a char, not padding
+    (9, "ab"),
+    (10, "ab\x00"),
+    (11, "日本語のテキストです日本語の文章"),         # CJK: wide shingles only
+    (12, "日本語のテキストです日本語の文書"),
+    (13, "party \U0001F389 time \U0001F389 party"),  # astral code points
+    (14, "party \U0001F389 time \U0001F389 partY"),
+    (15, "mixed 日本 text with ascii and 日本 chars"),  # narrow + wide
+    (16, "mixed 日本 text with ascii and 日本 chars!"),
+    (17, "the quick brown fox jumps over the lazy dog " * 3),
+    (17, "the quick brown fox jumps over the lazy cat " * 3),  # duplicate key
+    (18, "the quick brown fox jumps over the lazy dog " * 3),
+    (19, "࿿ကabc"),                        # cp 4095: first wide one
+    (20, "࿾ကabc"),
+]
+
+
+def test_verify_jaccard_codes_bit_identical_to_strings(spark):
+    """The integer-code verify returns exactly the string verify's
+    rows — every pair of the fixture, threshold 0 — with bit-identical
+    doubles: NULL, '', texts of <= 5 chars, an embedded NUL, CJK and
+    astral code points (the wide-shingle path), mixed texts, and a
+    duplicated key (each of its rows verifies on its own)."""
+    from extractthinker_spark.operators.dedup import verify_jaccard
+
+    df = spark.createDataFrame(EXACT_TEXTS, "doc_id int, text string")
+    ids = sorted({k for k, _ in EXACT_TEXTS})
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "a int, b int"
+    )
+    got = sorted(map(tuple, verify_jaccard(pairs, df, "doc_id", "text", 0.0).collect()))
+    want = sorted(map(tuple, _verify_jaccard_strings(pairs, df, "doc_id", "text", 0.0).collect()))
+    assert got == want
+    assert len(got) == len(ids) * (len(ids) - 1) // 2 + (len(ids) - 1)
+    jac = {(a, b): j for a, b, j in got}
+    assert jac[(1, 2)] == 1.0      # NULL ~ NULL
+    assert jac[(1, 3)] == 0.0      # NULL ~ ''
+    assert jac[(6, 7)] == 1.0
+    assert jac[(9, 10)] == 0.0     # 'ab' vs 'ab\x00': distinct one-shingle sets
+
+
+def test_shingle_codes_count_like_string_sets():
+    """``_shingle_codes_fn`` is an injective encoding of the string
+    shingle sets: per text, codes + wide shingles count exactly the
+    distinct string shingles, and across texts two shingles share a
+    code only if they are the same string."""
+    import random
+
+    from extractthinker_spark.operators.dedup import (
+        _shingle_codes_fn,
+        _shingles_of_fn,
+    )
+
+    random.seed(11)
+    alphabet = "ab \x00é࿾࿿က日\U0001F389"
+    texts = [t for _, t in EXACT_TEXTS] + [
+        "".join(random.choice(alphabet) for _ in range(random.randint(0, 12)))
+        for _ in range(300)
+    ] + ["x" * 300 + "日本" * 40]
+    for k in (3, 5, 7):
+        codes_of, shingles_of = _shingle_codes_fn(k), _shingles_of_fn(k)
+        seen: dict[int, str | None] = {}
+        for t in texts:
+            codes, wide = codes_of(t)
+            sh = shingles_of(t)
+            assert len(codes) + len(wide) == len(sh), (k, t)
+            assert list(codes) == sorted(set(codes.tolist()))
+            assert set(wide) <= set(sh)
+            narrow = [g for g in sh if g not in set(wide)]
+            assert sorted(codes_of(g)[0][0] for g in narrow) == codes.tolist()
+            for g in narrow:
+                c = int(codes_of(g)[0][0])
+                assert seen.setdefault(c, g) == g, (k, c, g, seen[c])
