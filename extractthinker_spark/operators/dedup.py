@@ -485,9 +485,18 @@ def _shingle_pass(
     num_perm: int | None,
     shingle_k: int,
 ) -> DataFrame:
-    """(_k, sig, codes, wide), one row per input row, materialized by a
-    lazy localCheckpoint so the LSH side and the verify side read one
-    computation."""
+    """(_k, sig, codes, wide), one row per input row, materialized by an
+    EAGER localCheckpoint (one job, when the caller builds its plan), so
+    the LSH side and the verify side read one computation.
+
+    Not a lazy checkpoint: the min-merge shuffle and the verify join's
+    broadcast both read the pass, and AQE starts those two jobs
+    together. The first to finish completes the checkpoint, which cuts
+    the lineage; the driver's only reference to the pass plan's SQL
+    metrics goes with it, and a GC before the other job's task ends
+    left that task reporting into accumulators that no longer exist
+    (``Failed to update accumulator``, pinned by
+    tests/test_dedup_caps.py::test_curate_cold_session_logs_no_lost_accumulators)."""
     norm = F.lower(normalize_ws_sql(F.col(text_col)))
     return (
         df.select(
@@ -495,7 +504,7 @@ def _shingle_pass(
             _pass_udf(num_perm, shingle_k)(norm).alias("_p"),
         )
         .select("_k", "_p.sig", "_p.codes", "_p.wide")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
 
@@ -711,14 +720,16 @@ def verify_jaccard(
 
     Each row of ``df`` is shingled once, into sorted distinct int64
     codes plus a (usually empty) list of shingles too wide to pack
-    (``_shingle_codes_fn``); the pairs join those per-row sets on
-    both ids and one Arrow pass intersects them. The codes are an
-    injective encoding of the char_shingles strings, not hashes, so
-    ``|A∩B|``, ``|A|`` and ``|B|`` are those of the string sets and
-    the jaccard double is bit-identical to the string-array verify
-    (pinned in tests/test_shingles.py, NULL and '' texts, wide code
-    points and duplicate keys included: a key with two rows verifies
-    each row, as before)."""
+    (``_shingle_codes_fn``), by one Arrow pass that is checkpointed
+    when this function is called (see ``_shingle_pass``); the pairs
+    join those per-row sets on both ids and the JVM intersects them
+    (``array_intersect``). The codes are an injective encoding of the
+    char_shingles strings, not hashes, so ``|A∩B|``, ``|A|`` and
+    ``|B|`` are those of the string sets and the jaccard double is
+    bit-identical to the string-array verify (pinned in
+    tests/test_shingles.py, NULL and '' texts, wide code points and
+    duplicate keys included: a key with two rows verifies each row, as
+    before)."""
     codes = _shingle_pass(df, key, text_col, None, shingle_k)
     return _verify_codes(pairs, codes, threshold)
 
@@ -737,9 +748,11 @@ def dedup_minhash(
     the same rows as ``verify_jaccard(minhash_lsh_candidates(...))``
     from one shingle pass: each row crosses into Python once and
     leaves with its signature and its exact shingle codes
-    (``_pass_udf``), materialized by a lazy localCheckpoint that both
-    the bucket join (after the per-key min-merge) and the verify join
-    read. Candidates travel as (a, b) ids only.
+    (``_pass_udf``). The pass is materialized by an eager
+    localCheckpoint when this function is called (``_shingle_pass``
+    says why not a lazy one); the bucket lists (after the per-key
+    min-merge) and the verify join both read it. Candidates travel as
+    (a, b) ids only.
 
     The band-bucket cap defaults ON (see minhash_lsh_candidates) —
     pass ``max_bucket_size=None`` for exhaustive pairs on corpora known
@@ -1171,16 +1184,13 @@ def dedup_lines_corpus(
 # Near-dup cluster resolution: connected components over candidate pairs
 # --------------------------------------------------------------------------
 
-_DRIVER_MAX_EDGES = 2_000_000
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
     max_iters: int = 15,
     strict: bool = False,
-    driver_max_edges: int | None = _DRIVER_MAX_EDGES,
+    driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """(node, comp) — connected components of the near-dup pair graph,
     comp = the smallest node id reachable from ``node``. The step
@@ -1188,19 +1198,22 @@ def connected_components(
     SimHash/cosine) and the keep-list: near-duplicates are EQUIVALENCE
     CLASSES, and pairs alone over-keep (a~b, b~c but a!~c by pair).
 
-    Two execution paths, same labels (comp = min reachable node — the
-    iterative fixpoint and union-find both compute exactly this):
+    The pairs are lazily localCheckpoint'ed first, so whichever path
+    runs reads them from one computation. Two execution paths, same
+    labels (comp = min reachable node — the iterative fixpoint and
+    union-find both compute exactly this):
 
     * **Bounded graphs** (at most ``driver_max_edges`` pair rows):
       the pairs are collected once, as ``limit(driver_max_edges + 1)``
       — one action, no union/distinct/persist/count chain — and
-      union-find runs on the driver (``_driver_components``); the
-      labels come back as a small local frame. Near-dup pair graphs
-      are sparse BY CONSTRUCTION (band-bucket caps / posting df-caps
-      upstream bound pair fan-out), so this is the common case, and it
-      replaces diameter-many sequential join rounds with one collect —
-      the same boundedness class as the Bloom-word and IVF-centroid
-      collects. 2M pairs ≈ tens of MB on the driver.
+      union-find runs on the driver; the labels come back as a small
+      local frame (so a join against them can broadcast). Near-dup
+      pair graphs are sparse BY CONSTRUCTION (band-bucket caps /
+      posting df-caps upstream bound pair fan-out), so this is the
+      common case, and it replaces diameter-many sequential join
+      rounds with one collect — the same boundedness class as the
+      Bloom-word and IVF-centroid collects. 2M pairs ≈ tens of MB on
+      the driver.
     * **Large graphs** (the collect came back with more than
       ``driver_max_edges`` rows, or ``driver_max_edges=None``):
       min-label propagation over the symmetrized distinct edges — each
@@ -1216,21 +1229,53 @@ def connected_components(
     """
     edges = pairs.select(
         F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    )
-    edges = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    ).localCheckpoint(eager=False)
     label_schema = edges.select(
         F.col("u").alias("node"), F.col("u").alias("comp")
     ).schema
-    comp = _driver_components(pairs, a_col, b_col, driver_max_edges)
-    if comp is not None:
-        return _local_frame(
-            pairs.sparkSession,
-            {"node": list(comp), "comp": list(comp.values())},
-            label_schema,
+    rows = (
+        None if driver_max_edges is None
+        else edges.limit(driver_max_edges + 1).collect()
+    )
+    if rows is not None and len(rows) <= driver_max_edges:
+        import pandas as pd
+
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for u, v in rows:
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                # the smaller root wins, so every root is its
+                # component's min node
+                if rv < ru:
+                    ru, rv = rv, ru
+                parent[rv] = ru
+        # from pandas, the frame ships as Arrow batches; a list of
+        # tuples would go through a Python RDD, whose worker tasks cost
+        # more than the handful of rows
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame(
+                {"node": list(parent), "comp": [find(n) for n in parent]}
+            ),
+            schema=label_schema,
         )
-    edges = edges.distinct().persist()
+    edges = (
+        edges.union(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        .distinct()
+        .persist()
+    )
     labels = (
         edges.select("u").distinct()
         .select(F.col("u").alias("node"), F.col("u").alias("comp"))
@@ -1282,50 +1327,6 @@ def connected_components(
     return labels
 
 
-def _local_frame(spark, cols: dict, schema) -> DataFrame:
-    """A small driver-built frame, shipped as Arrow batches (from
-    pandas): a list of tuples would go through a Python RDD, whose
-    Python worker tasks cost more than the handful of rows."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame(cols), schema=schema)
-
-
-def _driver_components(
-    pairs: DataFrame, a_col: str, b_col: str, bound: int | None
-) -> dict | None:
-    """{node: min node of its component} by union-find over the pairs
-    collected once with ``limit(bound + 1)``; None when ``bound`` is
-    None or the graph has more than ``bound`` pair rows (the caller's
-    distributed fallback)."""
-    if bound is None:
-        return None
-    rows = pairs.select(a_col, b_col).limit(bound + 1).collect()
-    if len(rows) > bound:
-        return None
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for u, v in rows:
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # the smaller root wins, so every root is its
-            # component's min node
-            if rv < ru:
-                ru, rv = rv, ru
-            parent[rv] = ru
-    return {n: find(n) for n in parent}
-
-
 def dedup_near_canonical(
     df: DataFrame,
     pairs: DataFrame,
@@ -1339,7 +1340,10 @@ def dedup_near_canonical(
     canonical (left join; no rows lost). Components come from
     ``connected_components``: on a bounded pair graph that is one
     collect plus union-find on the driver, and the label frame it
-    returns is local, so the join back broadcasts it."""
+    returns is local, so the join back broadcasts it. A caller that
+    only drops the non-canonical rows can skip this per-document
+    keep-list and anti-join ``connected_components``' rows with
+    ``node != comp`` instead (jobs/curate_job.py does)."""
     comps = connected_components(pairs, a_col, b_col)
     return df.select(F.col(key).alias(key)).join(
         comps.select(F.col("node").alias(key), "comp"), key, "left"
@@ -1349,37 +1353,6 @@ def dedup_near_canonical(
         (F.coalesce(F.col("comp"), F.col(key)) == F.col(key))
         .alias("is_canonical"),
     )
-
-
-def drop_near_duplicates(
-    df: DataFrame,
-    pairs: DataFrame,
-    key: str = "doc_id",
-    driver_max_edges: int | None = _DRIVER_MAX_EDGES,
-) -> DataFrame:
-    """``df`` without the non-canonical member of every near-dup
-    cluster: the rows ``dedup_near_canonical`` marks
-    ``is_canonical`` for the (a, b) ``pairs``, without the per-document
-    keep-list join.
-
-    On a bounded pair graph (see connected_components) the pairs are
-    collected once and resolved by union-find on the driver; the
-    non-canonical ids go back as a broadcast ``left_anti`` join, and
-    with none ``df`` is returned as is. Above ``driver_max_edges``
-    pair rows the distributed min-label propagation labels the nodes
-    and the anti-join reads its non-canonical rows."""
-    comp = _driver_components(pairs, "a", "b", driver_max_edges)
-    if comp is None:
-        labels = connected_components(pairs, driver_max_edges=None)
-        drop = labels.filter(F.col("node") != F.col("comp")).select(
-            F.col("node").alias(key)
-        )
-        return df.join(drop, key, "left_anti")
-    dropped = [n for n, c in comp.items() if n != c]
-    if not dropped:
-        return df
-    drop = _local_frame(df.sparkSession, {key: dropped}, df.select(key).schema)
-    return df.join(F.broadcast(drop), key, "left_anti")
 
 
 # --------------------------------------------------------------------------

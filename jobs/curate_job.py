@@ -124,19 +124,26 @@ class _Funnel:
 def near_dedup(text, stages: _Funnel):
     """Stage 8: drop every near-duplicate but its cluster's smallest
     doc_id. One shingle pass per document feeds the LSH candidates
-    and the exact integer Jaccard verify (``dedup_minhash``); the
-    verified pairs are collected once and resolved by union-find on
-    the driver, and the non-canonical ids leave by a broadcast
-    anti-join inside the stage's eager checkpoint
-    (``drop_near_duplicates``)."""
+    and the exact integer Jaccard verify (``dedup_minhash``);
+    ``connected_components`` collects the verified pairs once and
+    labels them by union-find on the driver, and the non-canonical
+    ids (``node != comp``) leave by a broadcast anti-join inside the
+    stage's eager checkpoint."""
+    import pyspark.sql.functions as F
+
     from extractthinker_spark.operators.dedup import (
+        connected_components,
         dedup_minhash,
-        drop_near_duplicates,
     )
 
     stages.begin("after_near_dedup")
-    pairs = dedup_minhash(text, "doc_id", "text")
-    return stages.checkpoint(drop_near_duplicates(text, pairs, key="doc_id"))
+    comps = connected_components(dedup_minhash(text, "doc_id", "text"))
+    dropped = comps.filter(F.col("node") != F.col("comp")).select(
+        F.col("node").alias("doc_id")
+    )
+    return stages.checkpoint(
+        text.join(F.broadcast(dropped), "doc_id", "left_anti")
+    )
 
 
 def main(argv: list[str] | None = None, stop: bool = True) -> dict:
