@@ -20,6 +20,18 @@ Design rules (see SURVEY.md):
 
 __version__ = "0.1.0"
 
+from pyspark import TaskContext
+
+if TaskContext.get() is not None:
+    # Inside a PySpark worker: every UDF closure imports this package
+    # while it is unpickled, so a reused worker patches itself on its
+    # first task. The driver leaves zipimport alone.
+    from extractthinker_spark.zipcache import (
+        install_stat_checked_zip_invalidation,
+    )
+
+    install_stat_checked_zip_invalidation()
+
 from extractthinker_spark.api import (  # noqa: F401
     Classification,
     CompletionStrategy,

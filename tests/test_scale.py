@@ -124,6 +124,37 @@ def test_doc_and_task_metrics(spark, docs):
     assert len(rows) <= 6
 
 
+def test_span_bytes_matches_python_utf8_sum(spark):
+    schema = DOCUMENTS_SCHEMA["spans"].dataType
+    rows = [
+        ("null_spans", None),
+        ("empty", []),
+        ("null_text", [("text", None, None, 0), ("text", "abc", None, 1)]),
+        ("null_ref", [("media", "cap", None, 0), ("media", None, "img/1.png", 1)]),
+        ("null_elem", [None, ("text", "x", None, 1)]),
+        ("multibyte", [("text", "héllo wörld", None, 0), ("text", "日本語", "é", 1)]),
+        ("astral", [("text", "a\U0001F600b", "\U00020000", 0), ("text", "", "", 1)]),
+    ]
+    df = spark.createDataFrame(rows, f"doc_id string, spans {schema.simpleString()}")
+    dm = doc_metrics(df)
+    assert dm.schema["n_bytes"].dataType.simpleString() == "bigint"
+    got = {r["doc_id"]: r["n_bytes"] for r in dm.collect()}
+
+    def utf8(s):
+        return 0 if s is None else len(s.encode("utf-8"))
+
+    want = {
+        doc_id: None
+        if spans is None
+        else sum(utf8(s[1]) + utf8(s[2]) for s in spans if s is not None)
+        for doc_id, spans in rows
+    }
+    assert got == want
+    assert want["empty"] == 0 and want["astral"] == 10
+    plan = dm._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan
+
+
 def test_checkpoint_resume(spark, docs, tmp_path):
     out_a = str(tmp_path / "single")
     out_b = str(tmp_path / "resumed")
